@@ -48,13 +48,6 @@ class LinkRankConfig:
     #: (Giraph auto-creates message targets; text/webpage paths default 1.0,
     #: the trust path defaults 0.0 — SURVEY.md §2.4)
     default_score: float = 1.0
-    #: truncate DataFrame lineage every N iterations via localCheckpoint.
-    #: KEEP AT 1: each iteration references the previous state three times
-    #: (message join, dangling aggregate, carry-through), so an uncheckpointed
-    #: plan grows ~3^N nodes — measured: interval>1 sends Catalyst analysis
-    #: time exponential at sf0.1. The checkpoint is one bounded
-    #: materialization per iteration (same role as the BSP superstep barrier).
-    checkpoint_interval: int = 1
     #: float32-widening teleport compat (SURVEY.md §2.6 #4). Disable to get
     #: the exact-double (1 - d) constant instead.
     float32_teleport: bool = True

@@ -35,6 +35,7 @@ from giranking_spark.operators.linkrank import (
     _maybe_broadcast,
     _set_checkpoint_dir_once,
     _should_broadcast_state,
+    _state_side,
 )
 
 #: hard cap on propagation rounds — a backstop against pathological
@@ -53,7 +54,7 @@ def _join_state(und: DataFrame, state: DataFrame, bcast: bool):
     default sort-merge strategy would re-SORT the edge relation every
     round (the sort, unlike the partitioning, is not persisted) — measured
     15x superlinear at the sf1->sf10 decade."""
-    s = _maybe_broadcast(state, bcast) if bcast else state.hint("shuffle_hash")
+    s = _state_side(state, bcast)
     return und.join(s, und.src == s.id)
 
 
@@ -344,7 +345,7 @@ def kcore_peel(
     bcast = _should_broadcast_state(adj, n_alive, deg)
     for _ in range(rounds):
         dead = deg.filter(F.col("degree") < k).select("id")
-        d = _maybe_broadcast(dead, bcast) if bcast else dead.hint("shuffle_hash")
+        d = _state_side(dead, bcast)
         upd = (
             adj.join(d, adj.src == d.id, "inner")
             .select(F.explode("nbrs").alias("id"))

@@ -28,8 +28,8 @@ from pyspark.sql import functions as F
 from giranking_spark.operators.linkrank import (
     _checkpoint,
     _checkpoint_nrows,
-    _maybe_broadcast,
-    _should_broadcast_state,
+    _loop_edges,
+    _state_side,
 )
 
 KATZ_ALPHA = 0.05
@@ -43,50 +43,27 @@ def katz_scores(
 ) -> DataFrame:
     """(id, katz) after ``iterations`` Katz steps from x₀ = 1, rounded to 6.
 
-    Scale shape (r13): scale-adaptive join dispatch — the previous
-    checkpointed edge relation had no stats, so Catalyst sort-merged the
-    per-step edges-x-state join and re-sorted the edges EVERY step. Now:
-    state under the broadcast threshold (the fixture regime) joins as a
-    BroadcastHashJoin that streams the checkpointed edges with NO exchange
-    or sort; past the threshold (the 100 TB regime) the edges are
-    hash-partitioned by ``src`` once and persisted so the SHUFFLE_HASH
-    join exchanges only the vertex-sized state per step. The message sum
-    keeps its map-side partial aggregation and the epilogue left join is
+    Scale shape (r13): the edge layout and the per-step join dispatch come
+    from the shared loop helpers (operators/linkrank.py:_loop_edges,
+    _state_side) — a broadcast-hash join that streams the cached edges
+    with NO exchange or sort while the state fits, SHUFFLE_HASH on a
+    hash(src)-persisted layout past the threshold. The message sum keeps
+    its map-side partial aggregation and the epilogue left join is
     vertex-sized on both sides — both a fused union-aggregate variant and
     an unconditional repartition+persist were measured SLOWER at fixture
     scale (interleaved A/B; guide §1.1's fresh-ideal-plan gotcha).
     """
-    # persist (columnar, compressed), not _checkpoint (raw UnsafeRow
-    # blocks): at sf100 the row-block copy of the 600M-edge relation blew
-    # task memory during materialization where the columnar cache fits
-    # (r14 decade sweep). persist also lets BOTH copies be released
-    # explicitly — the r13 double-cache (ADVICE) came from the
-    # un-unpersistable initial checkpoint staying alive as the lineage
-    # parent of the repartitioned copy.
-    e = edges.select("src", "dst").persist()
-    # materialize the cache BEFORE the union-distinct below: its two
-    # branches would otherwise both compute the (expensive) edge
-    # derivation inside one job, racing the cache fill
-    e.count()
-    state, n = _checkpoint_nrows(
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .select("id", F.lit(1.0).alias("katz"))
+    e, state, bcast = _loop_edges(
+        edges,
+        lambda e: _checkpoint_nrows(
+            e.select(F.col("src").alias("id"))
+            .unionByName(e.select(F.col("dst").alias("id")))
+            .distinct()
+            .select("id", F.lit(1.0).alias("katz"))
+        ),
     )
-    bcast = _should_broadcast_state(e, n, state)
-    if not bcast:
-        width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        # swap to the hash(src) loop layout: materialize the partitioned
-        # copy from the cache, then free the unpartitioned one — steady
-        # state holds ONE columnar copy in the loop's layout
-        e2 = e.repartition(width, "src").persist()
-        e2.count()
-        e.unpersist()
-        e = e2
     for _ in range(iterations):
-        sj = state.select(F.col("id").alias("src"), "katz")
-        s = _maybe_broadcast(sj, bcast) if bcast else sj.hint("shuffle_hash")
+        s = _state_side(state.select(F.col("id").alias("src"), "katz"), bcast)
         sums = (
             e.join(s, "src")
             .groupBy(F.col("dst").alias("_tid"))

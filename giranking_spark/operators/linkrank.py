@@ -9,7 +9,8 @@ The reference runs these as Giraph BSP vertex programs
 * aggregators      -> single-row aggregate DataFrames broadcast back into the
   plan (no driver-side collect inside the loop)
 * superstep loop   -> bounded Python loop, localCheckpoint() to truncate
-  lineage each iteration (SURVEY.md §4.2 #1)
+  lineage each iteration (SURVEY.md §4.2 #1); ONE loop
+  (:func:`_rank_fixpoint`) serves LinkRank, HostRank, TrustRank and PPR
 * normalization    -> one statement: avg/stddev_pop of log-scores + Normal-CDF
   squash (LinkRankComputation.java:216-255 spread over 3 supersteps collapses
   to a single Spark stage)
@@ -28,7 +29,9 @@ step, LinkRankComputation.java:280-282).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from giranking_spark.config import LinkRankConfig, TrustRankConfig
@@ -47,10 +50,6 @@ def all_vertex_ids(vertices: DataFrame | None, edges: DataFrame) -> DataFrame:
     if vertices is not None:
         ids = ids.unionByName(vertices.select("id"))
     return ids.distinct()
-
-
-def out_degrees(edges: DataFrame) -> DataFrame:
-    return edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
 
 
 def initial_state_ext(
@@ -284,6 +283,36 @@ def _state_side(df: DataFrame, do_broadcast: bool) -> DataFrame:
     return F.broadcast(df) if do_broadcast else df.hint("shuffle_hash")
 
 
+def _loop_edges(
+    edges: DataFrame, build_state: Callable[[DataFrame], tuple[DataFrame, int]]
+) -> tuple[DataFrame, DataFrame, bool]:
+    """(edges, state, bcast) for a loop joining edges(src, dst) with its
+    vertex state every superstep (katz, opic); the caller unpersists the
+    returned edges.
+
+    The edges are persisted columnar, not checkpointed: at sf100 the raw
+    row-block copy of the 600M-edge relation blew task memory where the
+    columnar cache fits (r14 decade sweep), and a persist can be released.
+    The cache is filled BEFORE ``build_state(edges)``, whose union branches
+    would otherwise race the fill inside one job. ``build_state`` returns
+    the materialized state and its row count, which decide the broadcast
+    dispatch. Past the threshold the edges swap to the hash(src) layout
+    (partitioned copy materialized from the cache, then the unpartitioned
+    one freed: ONE copy in steady state), so the SHUFFLE_HASH join
+    (:func:`_state_side`) exchanges only the vertex-sized state per step."""
+    e = edges.select("src", "dst").persist()
+    e.count()
+    state, n = build_state(e)
+    bcast = _should_broadcast_state(e, n, state)
+    if not bcast:
+        width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        e2 = e.repartition(width, "src").persist()
+        e2.count()
+        e.unpersist()
+        e = e2
+    return e, state, bcast
+
+
 def contributions(
     edges_x: DataFrame, state: DataFrame, broadcast_state: bool = False
 ) -> DataFrame:
@@ -293,6 +322,20 @@ def contributions(
     s = _state_side(state.select(F.col("id"), F.col("score")), broadcast_state)
     return edges_x.join(s, edges_x.src == F.col("id")).select(
         F.col("dst"), (F.col("score") / F.col("outdeg")).alias("contrib")
+    )
+
+
+def _salted_contributions(
+    edges_x: DataFrame, state: DataFrame, salt_buckets: int, broadcast_state: bool
+) -> DataFrame:
+    """:func:`contributions` plus the ``_salt`` = hash(src) % N column the
+    two-phase salted aggregation partially sums on (see
+    :func:`message_sums`)."""
+    s = _state_side(state.select(F.col("id"), F.col("score")), broadcast_state)
+    return edges_x.join(s, edges_x.src == F.col("id")).select(
+        F.col("dst"),
+        (F.col("score") / F.col("outdeg")).alias("contrib"),
+        F.pmod(F.xxhash64(edges_x.src), F.lit(salt_buckets)).alias("_salt"),
     )
 
 
@@ -313,12 +356,7 @@ def message_sums(
         return contributions(edges_x, state, broadcast_state).groupBy("dst").agg(
             F.sum("contrib").alias("msg")
         )
-    s = _state_side(state.select(F.col("id"), F.col("score")), broadcast_state)
-    salted = edges_x.join(s, edges_x.src == F.col("id")).select(
-        F.col("dst"),
-        (F.col("score") / F.col("outdeg")).alias("contrib"),
-        F.pmod(F.xxhash64(edges_x.src), F.lit(salt_buckets)).alias("_salt"),
-    )
+    salted = _salted_contributions(edges_x, state, salt_buckets, broadcast_state)
     partial = salted.groupBy("dst", "_salt").agg(F.sum("contrib").alias("_psum"))
     return partial.groupBy("dst").agg(F.sum("_psum").alias("msg"))
 
@@ -353,14 +391,9 @@ def fused_message_state(
             F.col("dst").alias("id"), F.col("contrib")
         )
     else:
-        s = _state_side(state.select(F.col("id"), F.col("score")), broadcast_state)
-        salted = edges_x.join(s, edges_x.src == F.col("id")).select(
-            F.col("dst"),
-            (F.col("score") / F.col("outdeg")).alias("contrib"),
-            F.pmod(F.xxhash64(edges_x.src), F.lit(salt_buckets)).alias("_salt"),
-        )
         msg_rows = (
-            salted.groupBy("dst", "_salt")
+            _salted_contributions(edges_x, state, salt_buckets, broadcast_state)
+            .groupBy("dst", "_salt")
             .agg(F.sum("contrib").alias("contrib"))
             .select(F.col("dst").alias("id"), "contrib")
         )
@@ -474,18 +507,36 @@ def _checkpoint_nrows(
     return ck, ck.count()
 
 
-def linkrank_raw(
+def _rank_fixpoint(
     vertices: DataFrame | None,
     edges: DataFrame,
-    cfg: LinkRankConfig = LinkRankConfig(),
-    num_updates: int | None = None,
+    state0: Callable[[DataFrame | None, DataFrame], DataFrame],
+    update: Callable[[int, Row], Column],
+    updates: int,
+    score0: Callable[[Row], Column] | None = None,
+    extras: list | None = None,
+    salt_buckets: int | str | None = None,
+    checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Run the rank fixpoint WITHOUT the CDF epilogue; returns
-    state(id, score, outdeg). Useful standalone (stage-level oracle queries)
-    and as the core of :func:`run_linkrank`."""
-    if cfg.remove_duplicates:
-        edges = dedup_edges(edges)
+    """The ONE PageRank-shaped superstep loop behind LinkRank, HostRank,
+    TrustRank and PPR (Pregelix's join + group-by superstep: the loop owns
+    the lifecycle, each algorithm supplies only columns and expressions).
 
+    ``state0(vertices, edges)`` builds the extended initial state
+    (id, [score,] outdeg, indeg, *extra) over the run-persisted inputs;
+    every column but id, score and indeg is carried through unchanged. The
+    checkpointed initial state is probed ONCE
+    (:func:`_probe_checkpointed_state`, ``extras`` appended to that
+    aggregate). From the probe ``row``, ``score0(row)`` sets the initial
+    score when it depends on a probed scalar (PPR's seed share) and
+    ``update(n, row)`` is the new score over ``msg``, ``dangling`` and the
+    carried columns (built only when n > 0).
+
+    Every superstep is checkpointed, with no interval knob: it references
+    the previous state three times (message join, dangling aggregate,
+    carry-through), so a skipped checkpoint grows the plan ~3^N nodes
+    (measured exponential Catalyst analysis at sf0.1). Returns
+    state(id, score, *carried)."""
     # persist the input edge relation for the run: the vertex union, the
     # out-degree aggregate and the per-iteration join all consume it — without
     # the cache the upstream derivation (at scale: the raw table scan) runs
@@ -498,47 +549,61 @@ def linkrank_raw(
     if vertices is not None:
         vertices = vertices.persist()
 
-    reliable = _set_checkpoint_dir_once(edges, cfg.checkpoint_dir)
-    state = _checkpoint(
-        initial_state_ext(vertices, edges, cfg.default_score), reliable
-    )
-    # n (getTotalNumVertices, counted after implicit vertex creation),
-    # the broadcast decision and the salt decision all come from ONE 1-row
-    # aggregate over the checkpointed state — see _probe_checkpointed_state
-    n, bcast, salt, _ = _probe_checkpointed_state(state, cfg.salt_buckets)
-    state = state.drop("indeg")
+    reliable = _set_checkpoint_dir_once(edges, checkpoint_dir)
+    state = _checkpoint(state0(vertices, edges), reliable)
+    # n (getTotalNumVertices, counted after implicit vertex creation), the
+    # broadcast decision, the salt decision and the caller's extras all come
+    # from ONE 1-row aggregate over the checkpointed state
+    n, bcast, salt, row = _probe_checkpointed_state(state, salt_buckets, extras)
     if vertices is not None:
         vertices.unpersist()
-    if n == 0:
-        edges_x.unpersist()
-        edges.unpersist()
-        return state
-
-    d, teleport = cfg.damping, cfg.teleport
-    updates = cfg.num_updates if num_updates is None else num_updates
-    for it in range(updates):
-        msgs = fused_message_state(edges_x, state, ["outdeg"], salt, bcast)
-        dang = dangling_mass(state)
-        new_state = msgs.crossJoin(F.broadcast(dang)).select(
-            "id",
-            (
-                F.lit(teleport / n)
-                + F.lit(d) * (F.col("msg") + F.col("dangling") / n)
-            ).alias("score"),
-            "outdeg",
-        )
-        state = (
-            _checkpoint(new_state, reliable)
-            if (it + 1) % cfg.checkpoint_interval == 0
-            else new_state
-        )
-        # r12: at the third decade each superstep's fused groupBy(id)
-        # exchange writes ~10+ GB of map-side partials (contrib rows are
-        # dst-scattered across the src-partitioned layout) — see _gc_nudge
-        _gc_nudge(state, n)
+    carry = [c for c in state.columns if c not in ("id", "score", "indeg")]
+    score = "score" if score0 is None else score0(row).alias("score")
+    state = state.select("id", score, *carry)
+    if n > 0:  # an empty graph has no 1/n share and nothing to update
+        new_score = update(n, row).alias("score")
+        for _ in range(updates):
+            msgs = fused_message_state(edges_x, state, carry, salt, bcast)
+            dang = dangling_mass(state)
+            state = _checkpoint(
+                msgs.crossJoin(F.broadcast(dang)).select("id", new_score, *carry),
+                reliable,
+            )
+            # r12: at the third decade each superstep's fused groupBy(id)
+            # exchange writes ~10+ GB of map-side partials (contrib rows are
+            # dst-scattered across the src-partitioned layout) — see _gc_nudge
+            _gc_nudge(state, n)
     edges_x.unpersist()
     edges.unpersist()
     return state
+
+
+def linkrank_raw(
+    vertices: DataFrame | None,
+    edges: DataFrame,
+    cfg: LinkRankConfig = LinkRankConfig(),
+    num_updates: int | None = None,
+) -> DataFrame:
+    """Run the rank fixpoint WITHOUT the CDF epilogue; returns
+    state(id, score, outdeg). Useful standalone (stage-level oracle queries)
+    and as the core of :func:`run_linkrank`."""
+    if cfg.remove_duplicates:
+        edges = dedup_edges(edges)
+
+    def update(n: int, _row: Row) -> Column:
+        return F.lit(cfg.teleport / n) + F.lit(cfg.damping) * (
+            F.col("msg") + F.col("dangling") / n
+        )
+
+    return _rank_fixpoint(
+        vertices,
+        edges,
+        lambda v, e: initial_state_ext(v, e, cfg.default_score),
+        update,
+        cfg.num_updates if num_updates is None else num_updates,
+        salt_buckets=cfg.salt_buckets,
+        checkpoint_dir=cfg.checkpoint_dir,
+    )
 
 
 def run_linkrank(
@@ -579,34 +644,12 @@ def trustrank_raw(
     if cfg.remove_duplicates:
         edges = dedup_edges(edges)
 
-    edges = edges.persist()  # same scan-amplification guard as linkrank_raw
-    edges_x = edges_with_outdeg(edges).persist()  # window: partitioned by src
-    if vertices is not None:
-        vertices = vertices.persist()
-
-    reliable = _set_checkpoint_dir_once(edges, cfg.checkpoint_dir)
-    state = initial_state_ext(vertices, edges, cfg.default_score)
-    # trusted detection at superstep 0 (TrustRankComputation.java:203-211):
-    # initial score within epsilon of 1.0
-    state = _checkpoint(
-        state.withColumn("trusted", (F.abs(F.col("score") - 1.0) < cfg.trusted_epsilon)),
-        reliable,
-    )
-    # n, num_trusted (IntSumAggregator NUM_TRUSTED), broadcast and salt
-    # decisions: ONE 1-row aggregate (see _probe_checkpointed_state)
-    n, bcast, salt, row = _probe_checkpointed_state(
-        state,
-        cfg.salt_buckets,
-        extras=[F.sum(F.col("trusted").cast("long")).alias("_nt")],
-    )
-    num_trusted = int(row["_nt"] or 0)
-    state = state.drop("indeg")
-    if vertices is not None:
-        vertices.unpersist()
-    if n == 0:
-        edges_x.unpersist()
-        edges.unpersist()
-        return state
+    def state0(v: DataFrame | None, e: DataFrame) -> DataFrame:
+        # trusted detection at superstep 0 (TrustRankComputation.java:203-211):
+        # initial score within epsilon of 1.0
+        return initial_state_ext(v, e, cfg.default_score).withColumn(
+            "trusted", (F.abs(F.col("score") - 1.0) < cfg.trusted_epsilon)
+        )
 
     # trusted-SET membership (the `trusteds.contains(...)` test, :220-224) —
     # distinct from the trusted FLAG: bug #2 makes "" a permanent member
@@ -614,13 +657,8 @@ def trustrank_raw(
     if cfg.bug_compat_empty_member:
         member = member | (F.col("id") == "")
 
-    d, teleport = cfg.damping, cfg.teleport
-    updates = cfg.num_updates if num_updates is None else num_updates
-    for it in range(updates):
-        msgs = fused_message_state(
-            edges_x, state, ["outdeg", "trusted"], salt, bcast
-        )
-        dang = dangling_mass(state)
+    def update(n: int, row: Row) -> Column:
+        num_trusted = int(row["_nt"] or 0)  # IntSumAggregator NUM_TRUSTED
         if cfg.bug_compat:
             dangling_term = F.lit(0.0)
         elif num_trusted == 0:
@@ -639,25 +677,20 @@ def trustrank_raw(
             dangling_term = F.when(
                 member, F.col("dangling") / num_trusted
             ).otherwise(F.lit(0.0))
-        new_state = msgs.crossJoin(F.broadcast(dang)).select(
-            "id",
-            (
-                F.lit(teleport / n)
-                + F.lit(d) * (F.col("msg") + dangling_term)
-            ).alias("score"),
-            "outdeg",
-            "trusted",
+        return F.lit(cfg.teleport / n) + F.lit(cfg.damping) * (
+            F.col("msg") + dangling_term
         )
-        state = (
-            _checkpoint(new_state, reliable)
-            if (it + 1) % cfg.checkpoint_interval == 0
-            else new_state
-        )
-        # same dead-shuffle lifecycle as linkrank_raw — see _gc_nudge
-        _gc_nudge(state, n)
-    edges_x.unpersist()
-    edges.unpersist()
-    return state
+
+    return _rank_fixpoint(
+        vertices,
+        edges,
+        state0,
+        update,
+        cfg.num_updates if num_updates is None else num_updates,
+        extras=[F.sum(F.col("trusted").cast("long")).alias("_nt")],
+        salt_buckets=cfg.salt_buckets,
+        checkpoint_dir=cfg.checkpoint_dir,
+    )
 
 
 def run_trustrank(

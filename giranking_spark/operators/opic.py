@@ -18,7 +18,7 @@ Synchronous batch formulation over a graph with N vertices:
 Scale posture: outdeg is attached once and checkpointed; each superstep is
 ONE equi-join + ONE aggregate, with the dangling total riding back as a
 broadcast single-row cross join (the sanctioned scalar-attach pattern,
-identical to agg_dangling_sum in operators/linkrank.py).  Iteration count
+identical to dangling_mass in operators/linkrank.py).  Iteration count
 is a shared CONTRACT with the unrolled-CTE DuckDB oracle
 (queries/crawlq.py:_opic_sql).
 """
@@ -30,8 +30,8 @@ from pyspark.sql import functions as F
 
 from giranking_spark.operators.linkrank import (
     _checkpoint,
-    _maybe_broadcast,
-    _should_broadcast_state,
+    _loop_edges,
+    _state_side,
 )
 
 OPIC_ITERATIONS = 4
@@ -43,60 +43,51 @@ def opic_scores(edges: DataFrame, iterations: int = OPIC_ITERATIONS) -> DataFram
     Scale shape (r13): the state init builds (id, outdeg) for every
     vertex (incl. implicit/dangling) from ONE union-groupBy instead of
     distinct + degree aggregate + left join (three exchanges → one, the
-    initial_state_ext pattern). Per step the cash-share join dispatches
-    scale-adaptively (katz_scores discipline): broadcast while the state
-    fits — the checkpointed edges stream with NO exchange or sort — and
-    SHUFFLE_HASH on a hash(src)-persisted layout past the threshold, so
-    the 100 TB regime exchanges only vertex-sized state per step. The
-    incoming-mass aggregate keeps its map-side partial aggregation and
+    initial_state_ext pattern). The edge layout and the per-step
+    cash-share join dispatch come from the shared loop helpers
+    (operators/linkrank.py:_loop_edges, _state_side), as in katz_scores.
+    The incoming-mass aggregate keeps its map-side partial aggregation and
     the epilogue left join is vertex-sized on both sides (a fused
     union-aggregate variant was measured SLOWER at fixture scale —
     interleaved A/B 4.89 vs 6.10 s — it ships every message row through a
     5-function aggregate; guide §1.1's fresh-ideal-plan gotcha)."""
-    # persist (columnar), not _checkpoint (raw row blocks) — see katz.py:
-    # both copies become releasable and the sf100 materialization fits;
-    # the eager count fills the cache before the union below fans out
-    e = edges.select("src", "dst").persist()
-    e.count()
-    st0 = (
-        e.select(F.col("src").alias("id"), F.lit(1).alias("_out"))
-        .unionByName(e.select(F.col("dst").alias("id"), F.lit(0).alias("_out")))
-        .groupBy("id")
-        .agg(F.sum("_out").cast("long").alias("outdeg"))
-    )
-    # graph size N rides as a broadcast 1-row scalar (the sanctioned
-    # scalar-attach pattern — no driver-side action) and is carried through
-    # the state so every step's dangling redistribution divides by it
-    nn = st0.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    state = _checkpoint(
-        st0.crossJoin(F.broadcast(nn)).select(
-            "id",
-            "outdeg",
-            (F.lit(1.0) / F.col("_n")).alias("cash"),
-            F.lit(0.0).alias("hist"),
-            "_n",
+
+    def init_state(e: DataFrame) -> tuple[DataFrame, int]:
+        st0 = (
+            e.select(F.col("src").alias("id"), F.lit(1).alias("_out"))
+            .unionByName(e.select(F.col("dst").alias("id"), F.lit(0).alias("_out")))
+            .groupBy("id")
+            .agg(F.sum("_out").cast("long").alias("outdeg"))
         )
-    )
-    n_verts = state.count()  # cached blocks — cheap; decides the dispatch
-    bcast = _should_broadcast_state(e, n_verts, state)
-    if not bcast:
-        width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        # swap to the hash(src) loop layout and free the unpartitioned
-        # copy — ONE columnar copy in steady state (see katz.py)
-        e2 = e.repartition(width, "src").persist()
-        e2.count()
-        e.unpersist()
-        e = e2
+        # graph size N rides as a broadcast 1-row scalar (the sanctioned
+        # scalar-attach pattern — no driver-side action) and is carried
+        # through the state so every step's dangling redistribution divides
+        # by it
+        nn = st0.agg(F.count(F.lit(1)).cast("double").alias("_n"))
+        state = _checkpoint(
+            st0.crossJoin(F.broadcast(nn)).select(
+                "id",
+                "outdeg",
+                (F.lit(1.0) / F.col("_n")).alias("cash"),
+                F.lit(0.0).alias("hist"),
+                "_n",
+            )
+        )
+        return state, state.count()  # cached blocks — cheap
+
+    e, state, bcast = _loop_edges(edges, init_state)
     for _ in range(iterations):
         # outdeg > 0 filter BEFORE the share division: ANSI mode
         # evaluates the projection on dangling rows even though the
         # inner join would prune them (same class as the r3
         # trust-flag cast fix).
-        sj = state.filter(F.col("outdeg") > 0).select(
-            F.col("id").alias("src"),
-            (F.col("cash") / F.col("outdeg")).alias("_share"),
+        s = _state_side(
+            state.filter(F.col("outdeg") > 0).select(
+                F.col("id").alias("src"),
+                (F.col("cash") / F.col("outdeg")).alias("_share"),
+            ),
+            bcast,
         )
-        s = _maybe_broadcast(sj, bcast) if bcast else sj.hint("shuffle_hash")
         inc = (
             e.join(s, "src")
             .groupBy(F.col("dst").alias("_tid"))

@@ -12,26 +12,18 @@ Per iteration (d = damping, S = seed set, D = dangling mass):
 
     r'(v) = (1-d)·1_S(v)/|S| + d·( Σ_{u→v} r(u)/outdeg(u) + D·1_S(v)/|S| )
 
-Scale shape is the rank loop's: one fused union-aggregate shuffle per
-iteration (fused_message_state), dangling mass and |S| ride as broadcast
-single-row cross joins, lineage checkpoint-truncated per iteration. The
-iteration count is a contract with the unrolled-CTE oracle in
-queries/compq.py.
+The loop is LinkRank's (operators/linkrank.py:_rank_fixpoint); this file
+supplies only the seed column, the |S| probe aggregate and the score
+expressions. The iteration count is a contract with the unrolled-CTE
+oracle in queries/compq.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
-from giranking_spark.operators.linkrank import (
-    _checkpoint,
-    _gc_nudge,
-    _probe_checkpointed_state,
-    dangling_mass,
-    edges_with_outdeg,
-    initial_state_ext,
-)
+from giranking_spark.operators.linkrank import _rank_fixpoint, initial_state_ext
 
 PPR_ITERATIONS = 5
 PPR_DAMPING = 0.85
@@ -51,50 +43,28 @@ def ppr_scores(
     vector is uniform over vertices matching ``seed_pred`` (a SQL boolean
     expression over ``id``, evaluated identically by the oracle)."""
     teleport = 1.0 - damping  # float64, embedded verbatim in the oracle SQL
-    e = edges.select("src", "dst").persist()
     seed = F.when(F.expr(seed_pred), 1.0).otherwise(0.0)
-    # vertex set + out-degrees in ONE shuffle (initial_state_ext) instead of
-    # the union-distinct + degree-aggregate + join chain; the seed flag is a
-    # projection over the result. The checkpointed base is the run's only
-    # |V| materialization — the previous shape executed the base relation
-    # twice (once for the seed-count aggregate, once for state0).
-    base = _checkpoint(
-        initial_state_ext(None, e).select(
-            "id", "outdeg", "indeg", seed.alias("seed")
-        )
-    )
-    # n, the broadcast decision and the seed count ride ONE 1-row aggregate
-    n, bcast, _, row = _probe_checkpointed_state(
-        base, None, extras=[F.sum("seed").alias("_sns")]
-    )
-    ns = float(row["_sns"] or 0.0)
-    # seed mass share, 0/0-safe: on a seedless graph every seed is 0, the
-    # when() never evaluates the division, and the share is exactly 0.0
-    # (mirrored in the oracle). ns is an exact small-integer-valued double,
-    # so the literal divides bit-identically to the former column.
-    share = F.when(F.col("seed") > 0, F.col("seed") / F.lit(ns)).otherwise(0.0)
-    state = base.select("id", share.alias("score"), "outdeg", "seed")
-    ex = edges_with_outdeg(e).persist()
-    from giranking_spark.operators.linkrank import fused_message_state
 
-    for _ in range(iterations):
-        msgst = fused_message_state(
-            ex, state, carry=["outdeg", "seed"], broadcast_state=bcast
-        )
-        d_mass = dangling_mass(state)
-        state = _checkpoint(
-            msgst.crossJoin(F.broadcast(d_mass)).select(
-                "id",
-                (
-                    F.lit(teleport) * share
-                    + F.lit(damping) * (F.col("msg") + F.col("dangling") * share)
-                ).alias("score"),
-                "outdeg",
-                "seed",
-            )
-        )
-        # same dead-shuffle lifecycle as linkrank_raw — see _gc_nudge
-        _gc_nudge(state, n)
-    e.unpersist()
-    ex.unpersist()
+    def share(row: Row) -> Column:
+        # seed mass share, 0/0-safe: on a seedless graph every seed is 0, the
+        # when() never evaluates the division, and the share is exactly 0.0
+        # (mirrored in the oracle). |S| is an exact small-integer-valued
+        # double, so the literal divides bit-identically to a column.
+        ns = float(row["_sns"] or 0.0)
+        return F.when(F.col("seed") > 0, F.col("seed") / F.lit(ns)).otherwise(0.0)
+
+    state = _rank_fixpoint(
+        None,
+        edges.select("src", "dst"),
+        # the seed flag is a projection over the one-shuffle vertex state;
+        # the initial score is the seed share, set once |S| is probed
+        lambda _, e: initial_state_ext(None, e).select(
+            "id", "outdeg", "indeg", seed.alias("seed")
+        ),
+        lambda _, row: F.lit(teleport) * share(row)
+        + F.lit(damping) * (F.col("msg") + F.col("dangling") * share(row)),
+        iterations,
+        score0=share,
+        extras=[F.sum("seed").alias("_sns")],
+    )
     return state.select("id", F.round("score", 6).alias("score"))

@@ -211,8 +211,9 @@ def test_trustrank_trusted_set_stays_distributed(spark):
     100 TB that string is gigabytes on the driver. The Spark port must keep
     membership as a boolean state column: no set/string aggregation anywhere
     in the fixpoint plan, and only scalar counts (n, num_trusted) ever reach
-    the driver. checkpoint_interval=2 leaves the one update uncheckpointed so
-    the full update lineage is visible to the assertion."""
+    the driver. Built under lazy_checkpoints() so the whole fixpoint
+    lineage (initial state, probe input and the update) is visible to the
+    assertion, not a bare checkpoint scan."""
     from giranking_spark.config import TrustRankConfig
     from giranking_spark.operators.linkrank import all_vertex_ids, trustrank_raw
 
@@ -221,8 +222,13 @@ def test_trustrank_trusted_set_stays_distributed(spark):
         "score",
         F.when(F.substring("id", 2, 100).cast("long") % 10 == 0, 1.0).otherwise(0.0),
     )
-    cfg = TrustRankConfig(damping=0.2, superstep_count=2, checkpoint_interval=2)
-    plan = plan_of(trustrank_raw(v, e, cfg, num_updates=1))
+    cfg = TrustRankConfig(damping=0.2, superstep_count=2)
+    with lazy_checkpoints():
+        plan = plan_of(trustrank_raw(v, e, cfg, num_updates=1))
+    # the lineage really is exposed: no checkpoint scan cuts it, it reaches
+    # the source tables
+    assert "ExistingRDD" not in plan, plan
+    assert "Scan parquet" in plan, plan
     for forbidden in ("collect_set", "collect_list", "concat_ws", "string_agg"):
         assert forbidden not in plan, forbidden
     assert "BatchEvalPython" not in plan
