@@ -494,7 +494,10 @@ def main() -> None:
             }
         except (OSError, ValueError, ZeroDivisionError):
             pass  # provenance-only; never fail the bench
-    full["cpus"] = cpus if (cpus := os.environ.get("SPARK_GRAFT_CPUS")) else None
+    try:
+        full["cpus"] = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
+    except ValueError:  # unset or not a number
+        full["cpus"] = None
     sidecar = (
         "bench_full_base16.json"
         if os.environ.get("SPARK_GRAFT_BENCH_SET") == "base16"

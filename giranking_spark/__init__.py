@@ -10,6 +10,7 @@ Catalyst/Tungsten handle planning, pushdown, codegen and shuffle strategy.
 Layout:
     config.py       — engine configuration (mirrors giraph.linkRank.* knobs)
     session.py      — SparkSession builder tuned for the target scale
+    lifecycle.py    — the one owner of checkpoints and output cache release
     functions/      — scalar column expression libraries (urls, stats, text, hashing)
     sources/        — readers: text graph formats, parquet tables, Nutch mirrors,
                       graph derivation from relational tables

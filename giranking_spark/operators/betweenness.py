@@ -26,13 +26,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.operators.components import undirected_edges
 from giranking_spark.operators.linkrank import (
-    _checkpoint,
-    _checkpoint_nrows,
     _maybe_broadcast,
     _state_side,
-    _set_checkpoint_dir_once,
     _should_broadcast_state,
 )
 
@@ -57,8 +55,8 @@ def betweenness_approx(
     # hash-partition by src once; checkpoint PRESERVES the partitioning, so
     # neither sweep ever re-exchanges or re-sorts the edge relation
     e = undirected_edges(edges).repartition(width, "src")
-    reliable = _set_checkpoint_dir_once(e, checkpoint_dir)
-    e = _checkpoint(e, reliable)
+    reliable = lifecycle._set_checkpoint_dir_once(e, checkpoint_dir)
+    e = lifecycle._checkpoint(e, reliable)
     verts = e.select(F.col("src").alias("id")).distinct()
     n_v = verts.count()
     # width probe over a bounded vertex slice, not the whole edge relation —
@@ -66,7 +64,7 @@ def betweenness_approx(
     bcast = _should_broadcast_state(e, n_v, verts.limit(10_000))
 
     # forward sweep: levels[l] = (seed, id, sigma) at BFS distance l
-    frontier = _checkpoint(
+    frontier = lifecycle._checkpoint(
         seeds.select(
             F.col("id").alias("seed"),
             F.col("id"),
@@ -86,7 +84,7 @@ def betweenness_approx(
             .groupBy("seed", "id")
             .agg(F.sum("sigma").alias("sigma"))
         )
-        frontier, n_frontier = _checkpoint_nrows(nxt, reliable)
+        frontier, n_frontier = lifecycle._checkpoint_nrows(nxt, reliable)
         if n_frontier == 0:
             break
         levels.append(frontier)
@@ -94,7 +92,7 @@ def betweenness_approx(
 
     # backward sweep: delta at the deepest level is 0; each shallower level
     # pulls (sigma_v / sigma_w) * (1 + delta_w) from its successors
-    delta = _checkpoint(
+    delta = lifecycle._checkpoint(
         levels[-1].select("seed", "id", F.lit(0.0).alias("delta")),
         reliable,
     )
@@ -126,7 +124,7 @@ def betweenness_approx(
             .select("seed", "id", "delta")
         )
         # vertices at this level with no successors keep delta 0
-        delta = _checkpoint(
+        delta = lifecycle._checkpoint(
             lv.select("seed", "id")
             .join(pulled, ["seed", "id"], "left")
             .select(

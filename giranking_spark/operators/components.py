@@ -11,7 +11,7 @@ Scale notes:
 - Per iteration: one shuffle (groupBy dst of the propagated labels) + one
   join back to state; lineage is truncated every step with the same
   localCheckpoint/reliable-checkpoint discipline as the rank loop
-  (operators/linkrank.py:_checkpoint) — state_{i+1} references state_i
+  (lifecycle.py:_checkpoint) — state_{i+1} references state_i
   twice, so an uncheckpointed plan grows exponentially.
 - Iteration count is bounded by the graph diameter. For web/host graphs the
   effective diameter is small (tens); for adversarial chain graphs the
@@ -27,13 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.operators.linkrank import (
-    _checkpoint,
-    _checkpoint_count,
-    _checkpoint_nrows,
-    _gc_nudge,
     _maybe_broadcast,
-    _set_checkpoint_dir_once,
     _should_broadcast_state,
     _state_side,
 )
@@ -115,13 +111,13 @@ def connected_components(
         .distinct()
         .select("id", F.col("id").alias("component"))
     )
-    reliable = _set_checkpoint_dir_once(state, checkpoint_dir)
+    reliable = lifecycle._set_checkpoint_dir_once(state, checkpoint_dir)
     # localCheckpoint erases size stats, so Catalyst can never auto-broadcast
     # loop state — decide once from the exact vertex count (same discipline
     # as the rank loop). Broadcast state means the big edge relation is
     # NEVER reshuffled across rounds; huge graphs fall back to shuffle joins.
     # (checkpoint + count fused into one job — see _checkpoint_nrows)
-    state, n_verts = _checkpoint_nrows(state, reliable)
+    state, n_verts = lifecycle._checkpoint_nrows(state, reliable)
     bcast = _should_broadcast_state(und, n_verts, state)
     # Frontier (delta) messaging: only vertices whose label changed last
     # round send to their neighbors. A message from an unchanged vertex is
@@ -154,11 +150,11 @@ def connected_components(
                 (F.col("component") < F.col("_old")).alias("_changed"),
             )
         )
-        relaxed, changed = _checkpoint_count(relaxed, "_changed", reliable)
+        relaxed, changed = lifecycle._checkpoint_count(relaxed, "_changed", reliable)
         state = relaxed.drop("_changed")
         # same dead-shuffle lifecycle as the rank/peel loops — see
-        # linkrank._gc_nudge (BASELINE.md round-12 cliff 1)
-        _gc_nudge(state, n_verts)
+        # lifecycle._gc_nudge (BASELINE.md round-12 cliff 1)
+        lifecycle._gc_nudge(state, n_verts)
         # Relax-fixpoint test BEFORE the doubling pass: at a relax fixpoint
         # every edge's endpoints already share a label (min over the closed
         # neighborhood is stable in both directions), so doubling can't
@@ -176,7 +172,7 @@ def connected_components(
             state.select(F.col("id").alias("_lid"), F.col("component").alias("_lcomp")),
             bcast,
         )
-        doubled = _checkpoint(
+        doubled = lifecycle._checkpoint(
             relaxed.join(
                 lookup, relaxed.component == lookup._lid, "left"
             ).select(
@@ -228,8 +224,8 @@ def bfs_distances(
     width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     und = undirected_edges(edges, dedup=False).repartition(width, "src").persist()
     state = seeds.select("id", F.lit(0).cast("long").alias("dist"))
-    reliable = _set_checkpoint_dir_once(state, checkpoint_dir)
-    state = _checkpoint(state, reliable)
+    reliable = lifecycle._set_checkpoint_dir_once(state, checkpoint_dir)
+    state = lifecycle._checkpoint(state, reliable)
     # state is bounded by the vertex count; decide broadcast once from it
     # (see connected_components) so the edge side never reshuffles per level
     bcast = _should_broadcast_state(und, _approx_n_vertices(und), state)
@@ -264,7 +260,7 @@ def bfs_distances(
                 ),
             )
         )
-        merged, changed = _checkpoint_count(merged, "_changed", reliable)
+        merged, changed = lifecycle._checkpoint_count(merged, "_changed", reliable)
         state = merged.drop("_changed")
         frontier = merged.filter(F.col("_changed")).drop("_changed")
         if changed == 0:
@@ -336,7 +332,7 @@ def kcore_peel(
     # full degrees once: alive_0 = all vertices, and every vertex appears
     # as a src because und is symmetric; collect_set already deduped the
     # doubled union, so size(nbrs) = distinct undirected degree
-    deg, n_alive = _checkpoint_nrows(
+    deg, n_alive = lifecycle._checkpoint_nrows(
         adj.select(
             F.col("src").alias("id"),
             F.size("nbrs").cast("bigint").alias("degree"),
@@ -352,7 +348,7 @@ def kcore_peel(
             .groupBy("id")
             .agg(F.count(F.lit(1)).cast("bigint").alias("_dd"))
         )
-        deg, n_next = _checkpoint_nrows(
+        deg, n_next = lifecycle._checkpoint_nrows(
             deg.filter(F.col("degree") >= k)
             .join(upd, "id", "left")
             .select(
@@ -363,8 +359,8 @@ def kcore_peel(
             )
         )
         # same dead-shuffle lifecycle as the rank loops — see
-        # linkrank._gc_nudge (this loop is where sf100 first hit ENOSPC)
-        _gc_nudge(deg, n_next)
+        # lifecycle._gc_nudge (this loop is where sf100 first hit ENOSPC)
+        lifecycle._gc_nudge(deg, n_next)
         # the alive set is monotone decreasing, so an unchanged COUNT
         # means nothing died and every remaining round is a no-op — early
         # exit is parity-safe under the fixed-round oracle contract (the
@@ -410,8 +406,8 @@ def sssp_distances(
     rev = wedges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
     und = fwd.unionByName(rev).repartition(width, "src").persist()
     state = seeds.select("id", F.lit(0).cast("long").alias("dist"))
-    reliable = _set_checkpoint_dir_once(state, checkpoint_dir)
-    state = _checkpoint(state, reliable)
+    reliable = lifecycle._set_checkpoint_dir_once(state, checkpoint_dir)
+    state = lifecycle._checkpoint(state, reliable)
     bcast = _should_broadcast_state(und, _approx_n_vertices(und), state)
     # frontier messaging (delta Bellman-Ford): only vertices whose dist
     # improved last round relax their out-edges — the textbook queue-based
@@ -440,7 +436,7 @@ def sssp_distances(
                 ),
             )
         )
-        merged, changed = _checkpoint_count(merged, "_changed", reliable)
+        merged, changed = lifecycle._checkpoint_count(merged, "_changed", reliable)
         state = merged.drop("_changed")
         frontier = merged.filter(F.col("_changed")).drop("_changed")
         if changed == 0:
@@ -496,15 +492,15 @@ def connected_components_star(
         .repartition(width, "u")
         .dropDuplicates(["u", "v"])
     )
-    reliable = _set_checkpoint_dir_once(pairs, checkpoint_dir)
-    pairs = _checkpoint(pairs, reliable)
+    reliable = lifecycle._set_checkpoint_dir_once(pairs, checkpoint_dir)
+    pairs = lifecycle._checkpoint(pairs, reliable)
     verts = (
         pairs.select(F.col("u").alias("id"))
         .unionByName(pairs.select(F.col("v").alias("id")))
         .distinct()
         .coalesce(width)
     )
-    verts = _checkpoint(verts, reliable)
+    verts = lifecycle._checkpoint(verts, reliable)
     # orient parent-last; drop self loops (their vertices stay via verts)
     e = pairs.filter(F.col("u") != F.col("v"))
 
@@ -561,7 +557,7 @@ def connected_components_star(
         # one large+small alternation per materialization — fusing two was
         # measured SLOWER at fixture scale (the nested sym-union plan costs
         # Catalyst more than the saved job; same lesson as STEPS_PER_CHECK)
-        e = _checkpoint(_small(_large(e)), reliable)
+        e = lifecycle._checkpoint(_small(_large(e)), reliable)
         # exact convergence test, ONE scalar: the pair list is a star forest
         # (= the alternation's fixpoint — both phases are no-ops on a star
         # forest, and parent-last orientation makes every center the
@@ -607,8 +603,8 @@ def per_seed_bfs(
     state = seeds.select(
         F.col("id").alias("seed"), "id", F.lit(0).cast("long").alias("dist")
     )
-    reliable = _set_checkpoint_dir_once(state, checkpoint_dir)
-    state = _checkpoint(state, reliable)
+    reliable = lifecycle._set_checkpoint_dir_once(state, checkpoint_dir)
+    state = lifecycle._checkpoint(state, reliable)
     bcast = _should_broadcast_state(und, _approx_n_vertices(und))
     # frontier messaging — see bfs_distances: only (seed, id) pairs reached
     # last level send; settled pairs would re-send exact duplicates
@@ -635,7 +631,7 @@ def per_seed_bfs(
                 ).alias("_changed"),
             )
         )
-        merged, changed = _checkpoint_count(merged, "_changed", reliable)
+        merged, changed = lifecycle._checkpoint_count(merged, "_changed", reliable)
         state = merged.drop("_changed")
         frontier = merged.filter(F.col("_changed")).drop("_changed")
         if changed == 0:
@@ -680,9 +676,9 @@ def coreness_peel(
     so an executor loss mid-peel cannot lose locally-checkpointed blocks
     (same posture as bowtie_classes)."""
     e = undirected_edges(edges).filter(F.col("src") != F.col("dst"))
-    reliable = _set_checkpoint_dir_once(e, checkpoint_dir)
-    e, n_e = _checkpoint_nrows(e, reliable)
-    prev_verts = _checkpoint(
+    reliable = lifecycle._set_checkpoint_dir_once(e, checkpoint_dir)
+    e, n_e = lifecycle._checkpoint_nrows(e, reliable)
+    prev_verts = lifecycle._checkpoint(
         e.select(F.col("src").alias("id")).distinct(), reliable
     )
     parts: list[DataFrame] = []
@@ -694,7 +690,7 @@ def coreness_peel(
             keep = deg.filter(F.col("deg") >= k).select(
                 F.col("src").alias("id")
             )
-            e, n_new = _checkpoint_nrows(
+            e, n_new = lifecycle._checkpoint_nrows(
                 e.join(keep, e.src == keep.id, "left_semi").join(
                     keep, F.col("dst") == keep.id, "left_semi"
                 ),
@@ -703,7 +699,7 @@ def coreness_peel(
             if n_new == n_e:
                 break
             n_e = n_new
-        surv = _checkpoint(
+        surv = lifecycle._checkpoint(
             e.select(F.col("src").alias("id")).distinct(), reliable
         )
         parts.append(

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.functions.hashing import affine, md5_u32, md5_u60
 from giranking_spark.functions.text import words
 
@@ -165,7 +166,7 @@ def ngram_jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    out = (
+    return lifecycle.materialize_output(
         inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
         .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
         .withColumn(
@@ -175,13 +176,9 @@ def ngram_jaccard_pairs(
             ),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    ).localCheckpoint()
-    # r14 unpersist discipline: the pair-sized output is materialized above,
-    # so the shingle cache is released before return instead of leaking one
-    # persisted relation per call into a long-lived session
-    sh.unpersist()
-    return out
+        .select("id_a", "id_b", "jaccard"),
+        sh,
+    )
 
 
 def minhash_signatures(
@@ -245,15 +242,13 @@ def banded_pairs(sig: DataFrame, k: int, bands: int) -> DataFrame:
     exploded = band_keys(sig, k, bands).persist()
     a = exploded.select(F.col("id").alias("id_a"), "band", "bh")
     b = exploded.select(F.col("id").alias("id_b"), "band", "bh")
-    out = (
+    return lifecycle.materialize_output(
         a.join(b, ["band", "bh"])
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_bands"))
-    ).localCheckpoint()
-    # r14 unpersist discipline (see ngram_jaccard_pairs)
-    exploded.unpersist()
-    return out
+        .agg(F.count(F.lit(1)).alias("n_bands")),
+        exploded,
+    )
 
 
 def incremental_lsh_matches(
@@ -323,18 +318,16 @@ def minhash_jaccard_estimates(
     for i in range(k):
         term = F.when(F.col(f"a{i}") == F.col(f"b{i}"), F.lit(1)).otherwise(F.lit(0))
         agree = term if agree is None else agree + term
-    out = (
+    return lifecycle.materialize_output(
         pairs.join(sa, "id_a")
         .join(sb, "id_b")
         .select(
             "id_a",
             "id_b",
             F.round(agree / F.lit(float(k)), 6).alias("jaccard_est"),
-        )
-    ).localCheckpoint()
-    # r14 unpersist discipline (see ngram_jaccard_pairs)
-    sig.unpersist()
-    return out
+        ),
+        sig,
+    )
 
 
 def simhash_signatures(
@@ -499,18 +492,16 @@ def containment_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    out = (
+    return lifecycle.materialize_output(
         inter.join(
             sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"),
             "id_a",
         )
         .withColumn("containment", F.round(F.col("inter") / F.col("sz_a"), 6))
         .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment")
-    ).localCheckpoint()
-    # r14 unpersist discipline (see ngram_jaccard_pairs)
-    sh.unpersist()
-    return out
+        .select("id_a", "id_b", "containment"),
+        sh,
+    )
 
 
 def chunk_dedup(

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from giranking_spark import lifecycle
 from giranking_spark.functions.hashing import md5_u32, md5_u60
 from giranking_spark.functions.text import words
 from giranking_spark.operators.dedup import _spread
@@ -107,10 +108,8 @@ def winnow_pairs(
     # persist: the fingerprint relation feeds the df-cap aggregate AND both
     # sides of the candidate self-join — without it the whole two-window
     # shingle pipeline re-executes per reference (the plan showed 24 Window
-    # ops = ~6 copies; r13, guide §5 caching-for-reuse). r14 unpersist
-    # discipline: the (pair-sized) output is materialized eagerly below and
-    # the fingerprint cache released before return, so library callers
-    # outside the bench do not accumulate a cached relation per call.
+    # ops = ~6 copies; r13, guide §5 caching-for-reuse). The cache is
+    # released once the pair-sized output is materialized.
     # (A plain fp.localCheckpoint() was measured ~25% slower at sf0.1 —
     # the eager checkpoint pays a separate materialization job for the
     # full fingerprint relation; persist folds it into the first consumer.)
@@ -123,15 +122,14 @@ def winnow_pairs(
     fpk = fp.join(keep.select("fp"), "fp")
     a = fpk.select(F.col("doc_id").alias("doc_a"), "fp")
     b = fpk.select(F.col("doc_id").alias("doc_b"), "fp")
-    out = (
+    return lifecycle.materialize_output(
         a.join(b, "fp")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    ).localCheckpoint()
-    fp.unpersist()
-    return out
+        .filter(F.col("shared") >= min_shared),
+        fp,
+    )
 
 
 def substring_runs(
@@ -173,10 +171,9 @@ def substring_runs(
         .groupBy("doc_a", "doc_b", (F.col("pa") - F.col("pb")).alias("d"), "isl")
         .agg((F.count(F.lit(1)) + F.lit(k - 1)).alias("run"))
     )
-    out = (
+    return lifecycle.materialize_output(
         runs.groupBy("doc_a", "doc_b")
         .agg(F.max("run").alias("longest_run"))
-        .filter(F.col("longest_run") >= min_run)
-    ).localCheckpoint()
-    g.unpersist()
-    return out
+        .filter(F.col("longest_run") >= min_run),
+        g,
+    )

@@ -25,9 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.operators.linkrank import (
-    _checkpoint,
-    _checkpoint_nrows,
     _maybe_broadcast,
     _should_broadcast_state,
 )
@@ -54,7 +53,7 @@ def _half_step(
     ).select(F.col(dst_col).alias("id"), F.col(from_score).alias("c"))
     srows = state.select("id", F.lit(0.0).alias("c"), F.col(from_score))
     crows = contrib.withColumn(from_score, F.lit(None).cast("double"))
-    raw = _checkpoint(
+    raw = lifecycle._checkpoint(
         crows.unionByName(srows)
         .groupBy("id")
         .agg(
@@ -78,7 +77,7 @@ def hits_scores(edges: DataFrame, iterations: int = HITS_ITERATIONS) -> DataFram
         .unionByName(e.select(F.col("dst").alias("id")))
         .distinct()
     )
-    state, n_state = _checkpoint_nrows(
+    state, n_state = lifecycle._checkpoint_nrows(
         verts.select("id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
     )
     # same once-per-run broadcast decision as the rank loop: small state

@@ -30,12 +30,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.operators.linkrank import (
-    _checkpoint,
-    _checkpoint_lazy,
     _maybe_broadcast,
     _state_side,
-    _set_checkpoint_dir_once,
 )
 from giranking_spark.operators.sketches import (
     hll_finalize,
@@ -69,15 +67,15 @@ def hyperball(
     # checkpoint preserves the partitioning, so no radius re-exchanges
     # or re-sorts the edge relation
     e = edges.select("src", "dst").distinct().repartition(width, "dst")
-    reliable = _set_checkpoint_dir_once(e, checkpoint_dir)
-    e = _checkpoint(e, reliable)
+    reliable = lifecycle._set_checkpoint_dir_once(e, checkpoint_dir)
+    e = lifecycle._checkpoint(e, reliable)
     verts = (
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
         .distinct()
     )
     # ball(v, 0) = {v}: one register row per vertex
-    regs = _checkpoint_lazy(
+    regs = lifecycle._checkpoint_lazy(
         hll_register_rows(verts, "id", "id")
         .groupBy("id", "idx")
         .agg(F.max("rho").alias("r")),
@@ -115,7 +113,7 @@ def hyperball(
         ).select(F.col("src").alias("id"), "idx", "r")
         # lazy checkpoint: the 2-scalar probe below is the materializing
         # full-scan action, so checkpoint + probe cost ONE job (r13)
-        merged = _checkpoint_lazy(
+        merged = lifecycle._checkpoint_lazy(
             msgs.withColumn("_self", F.lit(False))
             .unionByName(regs.withColumn("_self", F.lit(True)))
             .groupBy("id", "idx")

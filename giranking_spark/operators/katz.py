@@ -25,9 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.operators.linkrank import (
-    _checkpoint,
-    _checkpoint_nrows,
     _loop_edges,
     _state_side,
 )
@@ -55,7 +54,7 @@ def katz_scores(
     """
     e, state, bcast = _loop_edges(
         edges,
-        lambda e: _checkpoint_nrows(
+        lambda e: lifecycle._checkpoint_nrows(
             e.select(F.col("src").alias("id"))
             .unionByName(e.select(F.col("dst").alias("id")))
             .distinct()
@@ -69,7 +68,7 @@ def katz_scores(
             .groupBy(F.col("dst").alias("_tid"))
             .agg(F.sum("katz").alias("_msg"))
         )
-        state = _checkpoint(
+        state = lifecycle._checkpoint(
             state.join(sums, state["id"] == F.col("_tid"), "left").select(
                 "id",
                 (
@@ -79,6 +78,6 @@ def katz_scores(
             )
         )
     # state is checkpointed per iteration, so the returned plan never
-    # re-reads e — release it (r14 unpersist discipline)
+    # re-reads e — release it
     e.unpersist()
     return state.select("id", F.round("katz", 6).alias("katz"))

@@ -20,13 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.operators.components import _join_state, undirected_edges
-from giranking_spark.operators.linkrank import (
-    _checkpoint,
-    _checkpoint_nrows,
-    _gc_nudge,
-    _should_broadcast_state,
-)
+from giranking_spark.operators.linkrank import _should_broadcast_state
 
 LPA_ROUNDS = 3
 
@@ -81,7 +77,7 @@ def label_propagation(
     state = und.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("label")
     )
-    state, n = _checkpoint_nrows(state)  # fused job; n gates GC nudge
+    state, n = lifecycle._checkpoint_nrows(state)  # fused job; n gates GC nudge
     bcast = _should_broadcast_state(und, n, state)
     for _ in range(rounds):
         nb = _join_state(und, state, bcast).select(
@@ -91,11 +87,11 @@ def label_propagation(
         top = cnt.groupBy("v").agg(
             F.min(F.struct((-F.col("c")).alias("nc"), F.col("label"))).alias("t")
         )
-        state = _checkpoint(
+        state = lifecycle._checkpoint(
             top.select(F.col("v").alias("id"), F.col("t.label").alias("label"))
         )
         # same dead-shuffle lifecycle as linkrank_raw — see _gc_nudge
-        _gc_nudge(state, n)
+        lifecycle._gc_nudge(state, n)
     if substrate is None:
         und.unpersist()
     return state

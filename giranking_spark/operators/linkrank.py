@@ -34,6 +34,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.config import LinkRankConfig, TrustRankConfig
 from giranking_spark.functions.stats import normal_cdf
 from giranking_spark.operators.clean import dedup_edges
@@ -419,94 +420,6 @@ def dangling_mass(state: DataFrame) -> DataFrame:
     )
 
 
-def _set_checkpoint_dir_once(df: DataFrame, checkpoint_dir: str | None) -> bool:
-    """Set the reliable-checkpoint dir ONCE per run (returns whether reliable
-    checkpointing is on). setCheckpointDir mints a fresh UUID subdirectory on
-    every call — calling it per-checkpoint leaks one full state copy per
-    interval. One call per run = one UUID dir; superseded checkpoint data
-    within the run is reclaimed by the ContextCleaner when
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (set in
-    :func:`giranking_spark.session.get_spark`), and the whole dir is safe to
-    delete after the run."""
-    if not checkpoint_dir:
-        return False
-    df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-    return True
-
-
-#: vertex/state row count above which the per-round GC nudge fires — the
-#: one place the gate lives (r12 ADVICE: it was duplicated inline at four
-#: loop sites). Fixture-scale runs stay below it and pay nothing.
-GC_NUDGE_MIN_ROWS = 1_000_000
-
-
-def _gc_nudge(df: DataFrame, n_rows: int) -> None:
-    """Dead-shuffle-file reclamation inside long fixpoint loops (r12,
-    BASELINE.md round-12 cliff 1): each superstep's checkpoint makes the
-    previous superstep's shuffle dead, but the ContextCleaner deletes dead
-    shuffle files only after a JVM GC — at one superstep per ~minute the
-    periodic 2-min GC lags and local disk fills across a K-superstep run
-    (sf100 kcore died on ENOSPC from exactly this lifecycle). One driver
-    GC per superstep bounds live shuffle files to ~the current round;
-    gated to big states so fixture-scale runs pay nothing.
-
-    The py4j ``_jvm`` accessor is private API, but the config-driven
-    alternative (lowering spark.cleaner.periodicGC.interval) cannot track
-    the loop cadence: rounds range from seconds (fixtures) to minutes
-    (sf100), and any fixed interval either thrashes the former or lags the
-    latter — the nudge fires exactly once per dead generation."""
-    if n_rows > GC_NUDGE_MIN_ROWS:
-        df.sparkSession.sparkContext._jvm.System.gc()
-
-
-def _checkpoint(df: DataFrame, reliable: bool = False) -> DataFrame:
-    """Per-iteration lineage truncation (the BSP superstep barrier).
-
-    localCheckpoint (default) keeps blocks on executors — fast but
-    non-resilient. With ``reliable`` (cfg.checkpoint_dir set), uses reliable
-    ``df.checkpoint()`` so a cluster run survives executor loss mid-fixpoint
-    (SURVEY.md §4.2 #1)."""
-    if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
-def _checkpoint_count(
-    df: DataFrame, flag_col: str, reliable: bool = False
-) -> tuple[DataFrame, int]:
-    """Checkpoint + flagged-row count in ONE job (r13, guide §1.2 — fewer
-    passes): the LAZY checkpoint's first action materializes and caches
-    every partition, and that action IS the convergence count — the
-    fixpoint loops previously paid two jobs per superstep (eager
-    checkpoint, then a count over the cached blocks). The count scans all
-    partitions, so the checkpoint completes within it and lineage is
-    truncated exactly as before. Returns (checkpointed df, flagged count).
-    """
-    ck = _checkpoint_lazy(df, reliable)
-    n = ck.filter(F.col(flag_col)).count()
-    return ck, n
-
-
-def _checkpoint_lazy(df: DataFrame, reliable: bool = False) -> DataFrame:
-    """Lazy checkpoint: the caller's next FULL-SCAN action (a count or a
-    1-row aggregate over every partition) materializes and caches all
-    partitions, completing the checkpoint inside that job — use when a
-    convergence probe immediately follows, so checkpoint + probe cost one
-    job instead of two."""
-    return df.checkpoint(eager=False) if reliable else df.localCheckpoint(eager=False)
-
-
-def _checkpoint_nrows(
-    df: DataFrame, reliable: bool = False
-) -> tuple[DataFrame, int]:
-    """Checkpoint + total row count in ONE job — same lazy-checkpoint
-    fusion as :func:`_checkpoint_count` for loops whose convergence scalar
-    is the plain row count (the peel family) or that need the state size
-    for the broadcast/GC dispatch."""
-    ck = _checkpoint_lazy(df, reliable)
-    return ck, ck.count()
-
-
 def _rank_fixpoint(
     vertices: DataFrame | None,
     edges: DataFrame,
@@ -549,8 +462,8 @@ def _rank_fixpoint(
     if vertices is not None:
         vertices = vertices.persist()
 
-    reliable = _set_checkpoint_dir_once(edges, checkpoint_dir)
-    state = _checkpoint(state0(vertices, edges), reliable)
+    reliable = lifecycle._set_checkpoint_dir_once(edges, checkpoint_dir)
+    state = lifecycle._checkpoint(state0(vertices, edges), reliable)
     # n (getTotalNumVertices, counted after implicit vertex creation), the
     # broadcast decision, the salt decision and the caller's extras all come
     # from ONE 1-row aggregate over the checkpointed state
@@ -565,14 +478,14 @@ def _rank_fixpoint(
         for _ in range(updates):
             msgs = fused_message_state(edges_x, state, carry, salt, bcast)
             dang = dangling_mass(state)
-            state = _checkpoint(
+            state = lifecycle._checkpoint(
                 msgs.crossJoin(F.broadcast(dang)).select("id", new_score, *carry),
                 reliable,
             )
             # r12: at the third decade each superstep's fused groupBy(id)
             # exchange writes ~10+ GB of map-side partials (contrib rows are
             # dst-scattered across the src-partitioned layout) — see _gc_nudge
-            _gc_nudge(state, n)
+            lifecycle._gc_nudge(state, n)
     edges_x.unpersist()
     edges.unpersist()
     return state

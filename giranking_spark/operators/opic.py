@@ -28,8 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.operators.linkrank import (
-    _checkpoint,
     _loop_edges,
     _state_side,
 )
@@ -64,7 +64,7 @@ def opic_scores(edges: DataFrame, iterations: int = OPIC_ITERATIONS) -> DataFram
         # through the state so every step's dangling redistribution divides
         # by it
         nn = st0.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-        state = _checkpoint(
+        state = lifecycle._checkpoint(
             st0.crossJoin(F.broadcast(nn)).select(
                 "id",
                 "outdeg",
@@ -96,7 +96,7 @@ def opic_scores(edges: DataFrame, iterations: int = OPIC_ITERATIONS) -> DataFram
         dang = state.filter(F.col("outdeg") == 0).agg(
             F.coalesce(F.sum("cash"), F.lit(0.0)).alias("_dang")
         )
-        state = _checkpoint(
+        state = lifecycle._checkpoint(
             state.join(inc, state["id"] == F.col("_tid"), "left")
             .crossJoin(F.broadcast(dang))
             .select(

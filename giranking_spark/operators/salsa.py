@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from giranking_spark.operators.linkrank import _checkpoint
+from giranking_spark import lifecycle
 
 SALSA_ITERATIONS = 2
 
@@ -59,7 +59,7 @@ def _half_step(
         .groupBy(ew[dst_col].alias("_tid"))
         .agg(F.sum(F.col(from_score) * F.col(weight)).alias("_raw"))
     )
-    raw = _checkpoint(
+    raw = lifecycle._checkpoint(
         state.join(sums, state["id"] == F.col("_tid"), "left").select(
             "id", from_score,
             F.coalesce(F.col("_raw"), F.lit(0.0)).alias("_raw"),
@@ -74,8 +74,8 @@ def _half_step(
 
 def salsa_scores(edges: DataFrame, iterations: int = SALSA_ITERATIONS) -> DataFrame:
     """(id, hub, auth) after ``iterations`` SALSA rounds, rounded to 6."""
-    ew = _checkpoint(_weighted_edges(edges))
-    state = _checkpoint(
+    ew = lifecycle._checkpoint(_weighted_edges(edges))
+    state = lifecycle._checkpoint(
         ew.select(F.col("src").alias("id"))
         .unionByName(ew.select(F.col("dst").alias("id")))
         .distinct()

@@ -42,12 +42,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.operators.linkrank import (
     _state_side,
-    _checkpoint,
-    _checkpoint_nrows,
     _maybe_broadcast,
-    _set_checkpoint_dir_once,
     _should_broadcast_state,
 )
 
@@ -119,7 +117,7 @@ def min_reach_labels(
     STEPS_PER_CHECK relax+double supersteps; one scalar (changed count of
     the final relax) goes to the driver per materialization."""
     state = verts.select("id", F.col("id").alias("lbl"))
-    state = _checkpoint(state, reliable)
+    state = lifecycle._checkpoint(state, reliable)
     for _ in range(max_rounds):
         work = state
         for step in range(STEPS_PER_CHECK):
@@ -127,7 +125,7 @@ def min_reach_labels(
             work = _double_once(relaxed.drop("_changed"), bcast)
         # materialize the whole batch once; the convergence scalar reads the
         # final relax's _changed flags (carried through the last doubling)
-        final = _checkpoint(
+        final = lifecycle._checkpoint(
             _relax_once(edges, work, bcast), reliable
         )
         changed = final.filter(F.col("_changed")).count()
@@ -156,9 +154,9 @@ def strongly_connected_components(
         .unionByName(live_e.select(F.col("dst").alias("id")))
         .distinct()
     )
-    reliable = _set_checkpoint_dir_once(live_v, checkpoint_dir)
-    live_e = _checkpoint(live_e, reliable)
-    live_v, n_live = _checkpoint_nrows(live_v, reliable)
+    reliable = lifecycle._set_checkpoint_dir_once(live_v, checkpoint_dir)
+    live_e = lifecycle._checkpoint(live_e, reliable)
+    live_v, n_live = lifecycle._checkpoint_nrows(live_v, reliable)
     bcast = _should_broadcast_state(live_e, n_live, live_v)
     # assigned rows accumulate as a LIST of individually-checkpointed parts
     # (unioned lazily on return) — re-materializing the growing union every
@@ -191,7 +189,7 @@ def strongly_connected_components(
                 "left_semi",
             )
             e1 = _restrict(live_e, v1)
-            keep = _checkpoint(
+            keep = lifecycle._checkpoint(
                 v1.join(
                     e1.select(F.col("src").alias("id")).distinct(),
                     "id",
@@ -207,7 +205,7 @@ def strongly_connected_components(
             if n_keep == n_live:
                 break
             parts.append(
-                _checkpoint(
+                lifecycle._checkpoint(
                     live_v.join(keep, "id", "left_anti").select(
                         "id", F.col("id").alias("scc_id")
                     ),
@@ -215,23 +213,23 @@ def strongly_connected_components(
                 )
             )
             live_v = keep
-            live_e = _checkpoint(_restrict(live_e, live_v), reliable)
+            live_e = lifecycle._checkpoint(_restrict(live_e, live_v), reliable)
             n_live = n_keep
         if n_live == 0:
             break
         fwd = min_reach_labels(live_e, live_v, bcast, reliable)
         bwd = min_reach_labels(_reverse(live_e), live_v, bcast, reliable)
-        done = _checkpoint(
+        done = lifecycle._checkpoint(
             fwd.join(bwd.select("id", F.col("lbl").alias("_b")), "id")
             .filter(F.col("lbl") == F.col("_b"))
             .select("id", F.col("lbl").alias("scc_id")),
             reliable,
         )
         parts.append(done)
-        live_v, n_live = _checkpoint_nrows(
+        live_v, n_live = lifecycle._checkpoint_nrows(
             live_v.join(done, "id", "left_anti"), reliable
         )
-        live_e = _checkpoint(_restrict(live_e, live_v), reliable)
+        live_e = lifecycle._checkpoint(_restrict(live_e, live_v), reliable)
     # checked AFTER the loop, not via for/else: a graph that converges on
     # exactly the last allowed round leaves the for without break (the
     # n_live == 0 guard only runs at the top of the NEXT iteration) and a
@@ -258,7 +256,7 @@ def directed_closure(
     """(id) — vertices reachable from ``seeds`` along edge direction
     (reflexive). Frontier-free flag propagation: reached-set ∪ successors,
     distinct, until the count is stable (one scalar per round)."""
-    frontier, _ = _checkpoint_nrows(seeds.select("id").distinct(), reliable)
+    frontier, _ = lifecycle._checkpoint_nrows(seeds.select("id").distinct(), reliable)
     reached = frontier  # lazy union of checkpointed frontiers — never
     # re-materialized, so the accumulated set is not copied every round
     for _ in range(max_rounds):
@@ -271,7 +269,7 @@ def directed_closure(
             .select(F.col("dst").alias("id"))
             .distinct()
         )
-        frontier, n_frontier = _checkpoint_nrows(
+        frontier, n_frontier = lifecycle._checkpoint_nrows(
             succ.join(reached, "id", "left_anti"), reliable
         )
         if n_frontier == 0:
@@ -316,9 +314,9 @@ def bowtie_classes(
     # edge relation gets the same reliable-checkpoint posture as every
     # other state df (an executor loss mid-run must not lose edge blocks)
     e = edges.select("src", "dst").distinct().coalesce(width)
-    reliable = _set_checkpoint_dir_once(e, checkpoint_dir)
-    e = _checkpoint(e, reliable)
-    verts = _checkpoint(
+    reliable = lifecycle._set_checkpoint_dir_once(e, checkpoint_dir)
+    e = lifecycle._checkpoint(e, reliable)
+    verts = lifecycle._checkpoint(
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
         .distinct(),
@@ -336,10 +334,10 @@ def bowtie_classes(
     )
     fwd = directed_closure(e, pivot, bcast, reliable)
     bwd = directed_closure(_reverse(e), pivot, bcast, reliable)
-    core = _checkpoint(fwd.join(bwd, "id", "left_semi"), reliable)
-    in_set = _checkpoint(bwd.join(core, "id", "left_anti"), reliable)
-    out_set = _checkpoint(fwd.join(core, "id", "left_anti"), reliable)
-    nc = _checkpoint(
+    core = lifecycle._checkpoint(fwd.join(bwd, "id", "left_semi"), reliable)
+    in_set = lifecycle._checkpoint(bwd.join(core, "id", "left_anti"), reliable)
+    out_set = lifecycle._checkpoint(fwd.join(core, "id", "left_anti"), reliable)
+    nc = lifecycle._checkpoint(
         e.join(core.select(F.col("id").alias("src")), "src", "left_anti").join(
             core.select(F.col("id").alias("dst")), "dst", "left_anti"
         ),

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from giranking_spark import lifecycle
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -366,10 +368,10 @@ def kmeans_centroids(
             .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dv"))
             .select("cell", F.transform("dv", lambda s: s["m"]).alias("cv_new"))
         )
-        cents = (
-            cents.join(means, "cell", "left")
-            .select("cell", F.coalesce("cv_new", "cv").alias("cv"))
-            .localCheckpoint(eager=True)
+        cents = lifecycle._checkpoint(
+            cents.join(means, "cell", "left").select(
+                "cell", F.coalesce("cv_new", "cv").alias("cv")
+            )
         )
     return cents
 
@@ -1137,16 +1139,14 @@ def ivf_pq_topk(
     assigned = ivf_assign(corpus, cents, id_col, vec_col, cells_count=c)
     # residuals feed three consumers (codebook seed, encoding, cell re-join);
     # checkpoint once so the assign crossJoin+window lineage runs once
-    res = (
-        assigned.join(F.broadcast(cents), "cell")
-        .select(
+    res = lifecycle._checkpoint(
+        assigned.join(F.broadcast(cents), "cell").select(
             F.col(id_col),
             "cell",
             F.zip_with(
                 F.col(vec_col).cast("array<double>"), "cv", lambda x, cc: x - cc
             ).alias("rv"),
         )
-        .localCheckpoint(eager=True)
     )
     cb = pq_codebooks(res, m, ksub, dim, id_col, "rv")
     codes = pq_encode(res, cb, m, dim, id_col, "rv").join(
@@ -1245,7 +1245,6 @@ def semdedup(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = True,
     corpus_count: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al., 2023, arXiv:2303.09540): semantic
@@ -1312,18 +1311,12 @@ def semdedup(
         .filter(F.col("cos") >= F.lit(threshold))
     )
     w = Window.partitionBy(id_col).orderBy(F.desc("cos"), F.asc("dup_of"))
-    out = (
+    return lifecycle.materialize_output(
         pairs.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select(id_col, "dup_of", "cos")
+        .select(id_col, "dup_of", "cos"),
+        assigned,
     )
-    if not materialize:  # lazy plan for plan-shape tests
-        return out
-    # materialize the drop list, then release the persisted assignment so
-    # executor storage does not leak across invocations
-    out = out.localCheckpoint(eager=True)
-    assigned.unpersist()
-    return out
 
 
 def blocked_knn_candidates(

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
+
 #: id-oriented wedge budget: below this ABSOLUTE wedge count the wedge
 #: join is trivially cheap on any executor, whatever the ratio to m.
 WEDGE_ABS_CAP = 4_000_000
@@ -178,7 +180,7 @@ def triangle_relation(
     small = False
     if materialize or pre_materialized:
         if not pre_materialized:
-            co = co.localCheckpoint(eager=True)
+            co = lifecycle._checkpoint(co)
         stats = (
             co.groupBy("u")
             .agg(F.count(F.lit(1)).cast("long").alias("od"))
@@ -206,7 +208,7 @@ def triangle_relation(
         # construction must skip the checkpoint entirely; the oriented
         # relation then recomputes per consumer, which is fine for a
         # consumer that never runs an action.
-        o = o.localCheckpoint(eager=True)
+        o = lifecycle._checkpoint(o)
     closing = o.select(F.col("a").alias("b1"), F.col("b").alias("b2"))
     if small:
         closing = F.broadcast(closing)

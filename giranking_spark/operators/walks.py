@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.functions.hashing import md5_u32
 
 
@@ -60,23 +61,10 @@ def adjacency_arrays(edges: DataFrame) -> DataFrame:
     )
 
 
-def random_walks(
-    edges: DataFrame,
-    length: int,
-    materialize: bool = True,
-    persisted_out: list[DataFrame] | None = None,
-) -> DataFrame:
+def random_walks(edges: DataFrame, length: int) -> DataFrame:
     """One walk per distinct vertex with out-edges; ``length`` hash-driven
     steps.  Returns (walk_id, step, node) rows — step 0 is the start
-    vertex; walks that hit a dangling vertex end early.
-
-    ``materialize=False`` skips the eager localCheckpoint + cache cleanup
-    and returns the lazy plan (for plan-shape tests); pass ``persisted_out``
-    (an empty list) to receive the persisted intermediates (adjacency + per-
-    step states) so they can be ``unpersist()``-ed individually once the
-    plan is done — without it the only cleanup is the blunt
-    ``spark.catalog.clearCache()``, which evicts unrelated caches in a
-    shared session."""
+    vertex; walks that hit a dangling vertex end early."""
     adj = adjacency_arrays(edges).persist()
     state = adj.select(F.col("src").alias("walk_id"), F.col("src").alias("cur"))
     frames = [
@@ -114,14 +102,4 @@ def random_walks(
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
-    if persisted_out is not None:
-        persisted_out.extend(persisted)
-    if not materialize:
-        return out
-    # materialize, then release every intermediate cache (adjacency + all
-    # step states) — callers get a self-contained result and executor
-    # storage does not leak across invocations
-    out = out.localCheckpoint(eager=True)
-    for df in persisted:
-        df.unpersist()
-    return out
+    return lifecycle.materialize_output(out, *persisted)

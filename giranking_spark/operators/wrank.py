@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from giranking_spark.operators.linkrank import _checkpoint
+from giranking_spark import lifecycle
 
 WRANK_ITERATIONS = 3
 WRANK_DAMPING = 0.85
@@ -48,7 +48,7 @@ def weighted_pagerank(
     )
     wsum = e.groupBy("src").agg(F.sum("w").alias("outw"))
     nn = verts.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    state = _checkpoint(
+    state = lifecycle._checkpoint(
         verts.join(wsum, verts.id == wsum.src, "left")
         .crossJoin(F.broadcast(nn))
         .select(
@@ -78,7 +78,7 @@ def weighted_pagerank(
         d_mass = state.filter(F.col("outw") == 0.0).agg(
             F.coalesce(F.sum("score"), F.lit(0.0)).alias("dangling")
         )
-        state = _checkpoint(
+        state = lifecycle._checkpoint(
             msgst.crossJoin(F.broadcast(d_mass)).select(
                 "id",
                 (

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.queries.relational import load_events
 from giranking_spark.sources.tables import load_table
 
@@ -2613,7 +2614,7 @@ def q_events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == F.expr("(n + 1) div 2"))
         .select(F.col("adev").alias("mad"))
     )
-    out = (
+    return lifecycle.materialize_output(
         dev.crossJoin(F.broadcast(mad))
         .groupBy()
         .agg(
@@ -2623,11 +2624,9 @@ def q_events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(F.col("adev") > MAD_K * F.col("mad"), 1).otherwise(0)
             ).cast("long").alias("n_anomalies"),
-        )
-    ).localCheckpoint()
-    # r14 unpersist discipline: 1-row audit materialized, daily counts freed
-    daily.unpersist()
-    return out
+        ),
+        daily,
+    )
 
 
 QUERIES["events_anomaly_mad"] = q_events_anomaly_mad

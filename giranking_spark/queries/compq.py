@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.operators import linkrank as lr
 from giranking_spark.operators.components import (
     bfs_distances,
@@ -71,9 +72,7 @@ def q_graph_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_graph_degree_assort(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def q_graph_degree_assort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the derived graph: Pearson correlation of
     endpoint degrees over the (symmetric) undirected edge list — positive
     for hub-to-hub wiring, negative for hub-and-spoke (web graphs are
@@ -120,12 +119,7 @@ def q_graph_degree_assort(
             F.when(den != 0, num / den).otherwise(F.lit(0.0)), 6
         ).alias("assortativity"),
     )
-    if not materialize:  # lazy plan for plan-shape tests
-        return out
-    out = out.localCheckpoint(eager=True)
-    und.unpersist()
-    deg.unpersist()
-    return out
+    return lifecycle.materialize_output(out, und, deg)
 
 
 NEG_K = 3  # negative candidates per positive edge
@@ -217,9 +211,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_graph_modularity(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman modularity of the label-propagation communities — the
     community-quality metric that tells a pipeline whether its clustering
     is better than chance wiring: per community c,
@@ -290,12 +282,7 @@ def q_graph_modularity(
             ).alias("contrib"),
         )
     )
-    if not materialize:  # lazy plan for plan-shape tests
-        return out
-    out = out.localCheckpoint(eager=True)
-    labels.unpersist()
-    und.unpersist()
-    return out
+    return lifecycle.materialize_output(out, labels, und)
 
 
 def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -389,13 +376,7 @@ def q_graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("jaccard") >= NJ_THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
-    # r14 unpersist discipline: materialize the (result-sized) output,
-    # release the edge-sized cache — no persisted relation outlives the
-    # call, and the returned plan reads the checkpointed output blocks
-    # (they die with the DataFrame via the ContextCleaner)
-    out = out.localCheckpoint()
-    ek.unpersist()
-    return out
+    return lifecycle.materialize_output(out, ek)
 
 
 def q_graph_weighted_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -443,7 +424,7 @@ def q_graph_feature_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the 2-hop partials) and deg three — persist both so the
     # orders⋈lineitem derivation and the symmetrize-distinct shuffle run
     # once, not once per reference; released below after the per-vertex
-    # output is materialized (r14 unpersist discipline)
+    # output is materialized
     und = undirected_edges(derive_edges(spark, sf_dir)).persist()
     deg = und.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
@@ -484,10 +465,8 @@ def q_graph_feature_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cnt").alias("n_2hop"),
         F.round(F.sum("sm") / F.sum("cnt"), 6).alias("mean_2hop_deg"),
     )
-    out = h1.join(h2, "id", "left").localCheckpoint()
-    und.unpersist()
-    deg.unpersist()
-    return out
+    out = h1.join(h2, "id", "left")
+    return lifecycle.materialize_output(out, und, deg)
 
 
 def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -531,12 +510,7 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(F.lit(1.0) / F.log("d")), 6).alias("aa_score"),
         )
     )
-    # r14 unpersist discipline: materialize the result, release the
-    # edge-sized wedge cache before returning (blocks of the checkpointed
-    # output die with the DataFrame)
-    out = out.localCheckpoint()
-    undk.unpersist()
-    return out
+    return lifecycle.materialize_output(out, undk)
 
 
 from giranking_spark.functions.hashing import md5_u32_sql_duckdb  # noqa: E402
@@ -1102,10 +1076,8 @@ def q_graph_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(d >= 2, F.coalesce("n_tri", F.lit(0)) * 2.0 / (d * (d - 1))).otherwise(0.0),
             6,
         ).alias("coef"),
-    ).localCheckpoint()
-    # r14 unpersist discipline: result materialized, co-relation released
-    co.unpersist()
-    return out
+    )
+    return lifecycle.materialize_output(out, co)
 
 
 QUERIES["graph_clustering_coef"] = q_graph_clustering_coef
@@ -1411,9 +1383,7 @@ def motif_census(e: DataFrame) -> DataFrame:
     see q_graph_motifs for semantics. The edge relation is materialized
     once (eager localCheckpoint) so the three motif branches share one
     derivation instead of recomputing it per branch."""
-    from giranking_spark.operators.linkrank import _checkpoint
-
-    e = _checkpoint(e.select("src", "dst"))
+    e = lifecycle._checkpoint(e.select("src", "dst"))
     ab = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     bc = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
     ca = e.select(F.col("src").alias("c"), F.col("dst").alias("a"))
@@ -1481,9 +1451,7 @@ def ktruss_edges(e: DataFrame, k: int = KTRUSS_K,
     a LEFT SEMI join keeps qualifying edges — all equi-joins off
     checkpointed state; one scalar (edge count) per round, early exit at
     the fixpoint."""
-    from giranking_spark.operators.linkrank import _checkpoint
-
-    cur = _checkpoint(e.select("u", "v").distinct())
+    cur = lifecycle._checkpoint(e.select("u", "v").distinct())
     n = cur.count()
     for _ in range(rounds):
         e1, e2, e3 = cur.alias("e1"), cur.alias("e2"), cur.alias("e3")
@@ -1508,7 +1476,9 @@ def ktruss_edges(e: DataFrame, k: int = KTRUSS_K,
             .agg(F.count(F.lit(1)).alias("s"))
             .filter(F.col("s") >= k - 2)
         )
-        cur = _checkpoint(cur.join(sup.select("u", "v"), ["u", "v"], "left_semi"))
+        cur = lifecycle._checkpoint(
+            cur.join(sup.select("u", "v"), ["u", "v"], "left_semi")
+        )
         n2 = cur.count()
         if n2 == n:
             break
@@ -1985,11 +1955,7 @@ def q_graph_bipartite_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= BIPROJ_MIN_SHARED)
     )
-    # r14 unpersist discipline: materialize the result, release the
-    # edge-sized cache before returning
-    out = out.localCheckpoint()
-    ek.unpersist()
-    return out
+    return lifecycle.materialize_output(out, ek)
 
 
 QUERIES["graph_bipartite_project"] = q_graph_bipartite_project
@@ -2250,10 +2216,8 @@ def q_graph_local_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_local_bridges",
         F.round(F.col("n_local_bridges") / F.col("n_edges").cast("double"), 6)
         .alias("ratio"),
-    ).localCheckpoint()
-    # r14 unpersist discipline: 1-row audit materialized, edges released
-    ec.unpersist()
-    return out
+    )
+    return lifecycle.materialize_output(out, ec)
 
 
 QUERIES["graph_local_bridges"] = q_graph_local_bridges
@@ -2362,10 +2326,8 @@ def q_graph_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             3 * F.col("n_triangles") / F.col("n_wedges").cast("double"), 6
         ).alias("transitivity"),
-    ).localCheckpoint()
-    # r14 unpersist discipline: 1-row audit materialized, edges released
-    co.unpersist()
-    return out
+    )
+    return lifecycle.materialize_output(out, co)
 
 
 QUERIES["graph_transitivity"] = q_graph_transitivity

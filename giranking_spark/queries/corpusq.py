@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.functions import text as T
 from giranking_spark.operators.dedup import neardup_clusters
 from giranking_spark.operators.textops import quality_expr
@@ -74,15 +75,12 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters = neardup_clusters(
         exact_kept, k=MINHASH_K, bands=MINHASH_BANDS, n=JACCARD_N
     )
-    out = (
+    return lifecycle.materialize_output(
         clusters.filter("keep")
         .join(exact_kept.select("doc_id", "quality"), "doc_id")
-        .select("doc_id", "quality")
-    ).localCheckpoint()
-    # r14 unpersist discipline: surviving corpus ids materialized, the
-    # persisted exact-dedup relation freed
-    exact_kept.unpersist()
-    return out
+        .select("doc_id", "quality"),
+        exact_kept,
+    )
 
 
 QUERIES = {"corpus_pipeline": q_corpus_pipeline}

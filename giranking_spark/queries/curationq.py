@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.functions.hashing import md5_u60
 from giranking_spark.operators.packing import global_running_offset
 from giranking_spark.operators.textops import quality_score
@@ -139,13 +140,11 @@ def q_text_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tile = F.when(r <= cut, F.lit(1) + F.floor((r - 1) / big)).otherwise(
         rem + F.lit(1) + F.floor((r - 1 - cut) / base)
     )
-    out = (
+    return lifecycle.materialize_output(
         ranked.join(F.broadcast(n_total))
-        .select("doc_id", "quality", tile.cast("long").alias("decile"))
-    ).localCheckpoint()
-    # r14 unpersist discipline: per-doc deciles materialized, scores freed
-    q.unpersist()
-    return out
+        .select("doc_id", "quality", tile.cast("long").alias("decile")),
+        q,
+    )
 
 
 QUERIES["text_quality_deciles"] = q_text_quality_deciles

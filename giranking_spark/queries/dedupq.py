@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.functions.hashing import (
     HASH_FAMILY,
     MERSENNE_P,
@@ -332,10 +333,10 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist both pair lists (tiny): each is referenced twice (its count
     # and the semi-join) and the executed plan showed the full shingle +
     # window pipelines running once PER reference (r13; 13.5 → ~7 s at
-    # sf0.1). r14 unpersist discipline: the 1-row summary is materialized
-    # eagerly and both caches released before return (the eager
-    # .localCheckpoint() of the pair lists themselves was measured ~20%
-    # slower — it pays a standalone materialization job per list).
+    # sf0.1). Both caches are released once the 1-row summary is
+    # materialized (an eager .localCheckpoint() of the pair lists
+    # themselves was measured ~20% slower — it pays a standalone
+    # materialization job per list).
     truth = ngram_jaccard_pairs(
         docs, n=JACCARD_N, threshold=JACCARD_THRESHOLD, max_df=JACCARD_MAX_DF
     ).select("id_a", "id_b").persist()
@@ -343,7 +344,7 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, k=MINHASH_K, bands=MINHASH_BANDS, n=JACCARD_N
     ).select("id_a", "id_b").persist()
     hit = truth.join(cand, ["id_a", "id_b"], "left_semi")
-    out = (
+    return lifecycle.materialize_output(
         truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
         .crossJoin(cand.agg(F.count(F.lit(1)).cast("long").alias("n_cand")))
         .crossJoin(hit.agg(F.count(F.lit(1)).cast("long").alias("n_hit")))
@@ -352,11 +353,10 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_cand",
             "n_hit",
             F.round(F.col("n_hit") / F.col("n_truth"), 6).alias("recall"),
-        )
-    ).localCheckpoint()
-    truth.unpersist()
-    cand.unpersist()
-    return out
+        ),
+        truth,
+        cand,
+    )
 
 
 QUERIES["dedup_recall_eval"] = q_dedup_recall_eval
@@ -445,7 +445,7 @@ def q_text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     first = sh.groupBy("shingle").agg(F.min("id").alias("first_id"))
-    out = (
+    return lifecycle.materialize_output(
         sh.join(first, "shingle")
         .groupBy(F.col("id").alias("doc_id"))
         .agg(
@@ -460,11 +460,9 @@ def q_text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.count(F.lit(1)),
                 6,
             ).alias("novelty"),
-        )
-    ).localCheckpoint()
-    # r14 unpersist discipline: per-doc output materialized, shingles freed
-    sh.unpersist()
-    return out
+        ),
+        sh,
+    )
 
 
 QUERIES["text_novelty"] = q_text_novelty
@@ -496,15 +494,13 @@ def q_text_simhash_hamming_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sig = simhash_signatures(load_table(spark, sf_dir, "documents")).persist()
     nxt = sig.select((F.col("id") - 1).alias("id"), F.col("simhash").alias("sim2"))
-    out = (
+    return lifecycle.materialize_output(
         sig.join(nxt, "id")
         .select(F.expr("bit_count(simhash ^ sim2)").cast("long").alias("hamming"))
         .groupBy("hamming")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-    ).localCheckpoint()
-    # r14 unpersist discipline: histogram materialized, signatures freed
-    sig.unpersist()
-    return out
+        .agg(F.count(F.lit(1)).cast("long").alias("n_pairs")),
+        sig,
+    )
 
 
 QUERIES["text_simhash_hamming_hist"] = q_text_simhash_hamming_hist
@@ -559,14 +555,14 @@ def q_text_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("n_new"),
         )
     )
-    out = per_bucket.select(
-        "bucket", "n_shingles", "n_new",
-        F.round(F.col("n_new") / F.col("n_shingles").cast("double"), 6)
-        .alias("novelty"),
-    ).localCheckpoint()
-    # r14 unpersist discipline: bucket curve materialized, shingles freed
-    sh.unpersist()
-    return out
+    return lifecycle.materialize_output(
+        per_bucket.select(
+            "bucket", "n_shingles", "n_new",
+            F.round(F.col("n_new") / F.col("n_shingles").cast("double"), 6)
+            .alias("novelty"),
+        ),
+        sh,
+    )
 
 
 QUERIES["text_shingle_novelty"] = q_text_shingle_novelty

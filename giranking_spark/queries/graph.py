@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.config import LinkRankConfig, TrustRankConfig
 from giranking_spark.functions.stats import normal_cdf_sql
 from giranking_spark.operators import linkrank as lr
@@ -397,14 +398,14 @@ def q_rank_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = LinkRankConfig()
     edges = derive_edges(spark, sf_dir)
     edges_x = lr.edges_with_outdeg(edges).persist()
-    state = lr._checkpoint(lr.initial_state(None, edges, cfg.default_score))
+    state = lifecycle._checkpoint(lr.initial_state(None, edges, cfg.default_score))
     n = state.count()
     d, teleport = cfg.damping, cfg.teleport
     residuals = []
     for it in range(1, RESID_UPDATES + 1):
         fused = lr.fused_message_state(edges_x, state, ["outdeg", "score"])
         dang = lr.dangling_mass(state)
-        stepped = lr._checkpoint(
+        stepped = lifecycle._checkpoint(
             fused.crossJoin(F.broadcast(dang)).select(
                 "id",
                 (

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.functions.hashing import (
     md5_u32_sql_duckdb,
     md5_u60_sql_duckdb,
@@ -666,11 +667,10 @@ def q_sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (type, register) relation is tiny (types x m rows) and has two
     # consumers — eagerly checkpoint it (blocks are freed with the
     # DataFrame, unlike an unpersisted .persist())
-    regs = (
+    regs = lifecycle._checkpoint(
         hll_register_rows(ev, "user_id", "event_type")
         .groupBy("event_type", "idx")
         .agg(F.max("rho").alias("r"))
-        .localCheckpoint(eager=True)
     )
     per_type = hll_finalize(regs, "event_type")
     merged = regs.groupBy("idx").agg(F.max("r").alias("r"))
@@ -1024,7 +1024,7 @@ def q_sketch_theta_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy()
         .agg(F.count(F.lit(1)).cast("long").alias("exact_intersect"))
     )
-    out = (
+    return lifecycle.materialize_output(
         thetas.crossJoin(F.broadcast(retained))
         .crossJoin(F.broadcast(exact))
         .select(
@@ -1036,12 +1036,10 @@ def q_sketch_theta_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("est_intersect"),
             "exact_intersect",
-        )
-    ).localCheckpoint()
-    # r14 unpersist discipline: 1-row audit materialized, sketches freed
-    sa.unpersist()
-    sb.unpersist()
-    return out
+        ),
+        sa,
+        sb,
+    )
 
 
 QUERIES["sketch_theta_intersect"] = q_sketch_theta_intersect

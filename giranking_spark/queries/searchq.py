@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.functions.hashing import md5_u32, md5_u60, md5_u60_sql_duckdb
 from giranking_spark.queries.textq import WORDS_SQL
 from giranking_spark.sources.tables import load_table
@@ -44,8 +45,7 @@ def _tf_dl(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     times (per-term scores, document frequency, query-term extraction) and
     dl three times (join, avgdl, N) — without the persist the tokenize +
     explode lineage re-executes per reference (measured 26.7 s → ~8 s at
-    sf0.1). r14 unpersist discipline: callers materialize their (top-k
-    sized) output eagerly and unpersist both relations before returning."""
+    sf0.1). Callers release both via ``lifecycle.materialize_output``."""
     from giranking_spark.operators.dedup import shingle_rows
 
     docs = load_table(spark, sf_dir, "documents")
@@ -106,14 +106,13 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = _bm25_scores(tf, dl, n_docs, qterms)
     w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
-    out = (
+    return lifecycle.materialize_output(
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= BM25_TOPK)
-        .select("query_id", "doc_id", "bm25")
-    ).localCheckpoint()
-    tf.unpersist()
-    dl.unpersist()
-    return out
+        .select("query_id", "doc_id", "bm25"),
+        tf,
+        dl,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -175,14 +174,13 @@ def q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     wf = Window.partitionBy("query_id").orderBy(F.desc("rrf"), F.asc("doc_id"))
-    out = (
+    return lifecycle.materialize_output(
         fused.withColumn("__rn", F.row_number().over(wf))
         .filter(F.col("__rn") <= RRF_TOPK)
-        .select("query_id", "doc_id", "rrf")
-    ).localCheckpoint()
-    tf.unpersist()
-    dl.unpersist()
-    return out
+        .select("query_id", "doc_id", "rrf"),
+        tf,
+        dl,
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -7,9 +7,11 @@ to 6 decimals.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.operators.similarity import (
     brute_force_range,
     brute_force_topk,
@@ -126,9 +128,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 OUTLIER_TOPK = 50
 
 
-def q_embed_outlier_scores(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def q_embed_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space QC: top-``OUTLIER_TOPK`` outliers by Euclidean
     distance to the corpus mean vector, with a z-score against the distance
     distribution — the cheap screen that surfaces corrupted embeddings /
@@ -175,7 +175,7 @@ def q_embed_outlier_scores(
     s = d.agg(
         F.avg("dist").alias("md"), F.stddev_pop("dist").alias("sd")
     )
-    out = (
+    return lifecycle.materialize_output(
         d.crossJoin(F.broadcast(s))
         .select(
             "vec_id",
@@ -183,13 +183,9 @@ def q_embed_outlier_scores(
             F.round((F.col("dist") - F.col("md")) / F.col("sd"), 6).alias("z"),
         )
         .orderBy(F.desc("dist"), F.asc("vec_id"))
-        .limit(OUTLIER_TOPK)
+        .limit(OUTLIER_TOPK),
+        d,
     )
-    if not materialize:  # lazy plan for plan-shape tests
-        return out
-    out = out.localCheckpoint(eager=True)
-    d.unpersist()
-    return out
 
 
 
@@ -1024,12 +1020,9 @@ def q_simsearch_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)
-    out = out.withColumn(
-        "recall", F.round(F.col("n_hit") / F.lit(TOPK), 6)
-    ).localCheckpoint()
-    # r14 unpersist discipline: per-query rows materialized, GEMM freed
-    exact.unpersist()
-    return out
+    return lifecycle.materialize_output(
+        out.withColumn("recall", F.round(F.col("n_hit") / F.lit(TOPK), 6)), exact
+    )
 
 
 QUERIES["simsearch_recall"] = q_simsearch_recall
@@ -1096,12 +1089,9 @@ def q_simsearch_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
     )
-    out = out.withColumn(
-        "recall", F.round(F.col("n_hit") / F.lit(TOPK), 6)
-    ).localCheckpoint()
-    # r14 unpersist discipline: per-query rows materialized, GEMM freed
-    exact.unpersist()
-    return out
+    return lifecycle.materialize_output(
+        out.withColumn("recall", F.round(F.col("n_hit") / F.lit(TOPK), 6)), exact
+    )
 
 
 QUERIES["simsearch_ivfpq_recall"] = q_simsearch_ivfpq_recall
@@ -1221,11 +1211,9 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = w.crossJoin(F.broadcast(nn)).select(
             F.col("i").alias("dim"), (F.col("wx") / F.col("nn")).alias("x")
         )
-    # materialize the d-row result, then release the persisted Gram — the
-    # cache must not leak across invocations (the result no longer needs it)
-    out = v.select("dim", F.round("x", 6).alias("loading")).localCheckpoint(eager=True)
-    g.unpersist()
-    return out
+    return lifecycle.materialize_output(
+        v.select("dim", F.round("x", 6).alias("loading")), g
+    )
 
 
 QUERIES["embed_pca_power"] = q_embed_pca_power
@@ -1287,10 +1275,8 @@ def q_embed_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, queries = _corpus_queries(spark, sf_dir)
     # k-row ground truth is eagerly checkpointed (three consumers; blocks
     # are freed with the DataFrame, unlike an unpersisted .persist())
-    exact = (
-        brute_force_topk(corpus, queries, k=TOPK)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+    exact = lifecycle._checkpoint(
+        brute_force_topk(corpus, queries, k=TOPK).select("query_id", "neighbor_id")
     )
     mrl = brute_force_topk(trunc(corpus), trunc(queries), k=TOPK).select(
         "query_id", "neighbor_id"
@@ -1811,11 +1797,12 @@ def _recall_summary(exact: DataFrame, ann: DataFrame) -> DataFrame:
     # semi-join AND the per-query count, so the brute-force GEMM top-k
     # behind it executed twice per recall gate (r13; ReusedExchange does
     # not fire across the aggregate/join split — same pattern as
-    # dedup_recall_eval). r14 unpersist discipline: the 1-row summary is
-    # materialized eagerly and both caches released before return (eager
-    # .localCheckpoint() of the pair lists was measured ~20% slower).
-    exact = exact.persist()
-    ann = ann.persist()
+    # dedup_recall_eval; an eager .localCheckpoint() of the pair lists was
+    # measured ~20% slower). Only inputs not already cached are persisted
+    # here, and only those are released: a cache the caller holds survives.
+    owned = [df for df in (exact, ann) if df.storageLevel == StorageLevel.NONE]
+    for df in owned:
+        df.persist()
     hits = exact.join(ann, ["query_id", "neighbor_id"], "left_semi")
     per_q = (
         exact.groupBy("query_id")
@@ -1833,19 +1820,19 @@ def _recall_summary(exact: DataFrame, ann: DataFrame) -> DataFrame:
             F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
         )
     )
-    out = per_q.groupBy().agg(
-        F.count(F.lit(1)).cast("long").alias("n_queries"),
-        F.lit(TOPK).cast("long").alias("k"),
-        F.round(
-            F.sum("n_hit") / F.sum("n_exact").cast("double"), 6
-        ).alias("mean_recall"),
-        F.sum(
-            F.when(F.col("n_hit") == F.col("n_exact"), 1).otherwise(0)
-        ).cast("long").alias("n_perfect"),
-    ).localCheckpoint()
-    exact.unpersist()
-    ann.unpersist()
-    return out
+    return lifecycle.materialize_output(
+        per_q.groupBy().agg(
+            F.count(F.lit(1)).cast("long").alias("n_queries"),
+            F.lit(TOPK).cast("long").alias("k"),
+            F.round(
+                F.sum("n_hit") / F.sum("n_exact").cast("double"), 6
+            ).alias("mean_recall"),
+            F.sum(
+                F.when(F.col("n_hit") == F.col("n_exact"), 1).otherwise(0)
+            ).cast("long").alias("n_perfect"),
+        ),
+        *owned,
+    )
 
 
 def _recall_summary_oracle(ann_sql: str, neighbor_col: str = "neighbor_id") -> str:

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from giranking_spark import lifecycle
 from giranking_spark.functions.hashing import md5_u32_sql_duckdb
 from giranking_spark.functions.text import LANG_ORDER, STOPWORDS, words
 from giranking_spark.operators.textops import (
@@ -356,7 +357,7 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = q_text_cooc(spark, sf_dir).persist()
     tot = pairs.agg(F.sum("n").cast("long").alias("tot"))
     marg = pairs.groupBy("w1").agg(F.sum("n").cast("long").alias("m1"))
-    out = (
+    return lifecycle.materialize_output(
         pairs.join(marg, "w1")
         .join(
             marg.select(
@@ -380,11 +381,9 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 6,
             ).alias("pmi"),
-        )
-    ).localCheckpoint()
-    # r14 unpersist discipline: PMI rows materialized, pair counts freed
-    pairs.unpersist()
-    return out
+        ),
+        pairs,
+    )
 
 
 QUERIES = {
@@ -917,14 +916,13 @@ def q_text_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this query keeps the checkpoint form; the final output checkpoint
     # below cuts the returned plan's reference to db, so db's blocks die
     # at the first driver GC after return instead of living as long as the
-    # caller holds the result (r14 unpersist discipline).
-    db = (
+    # caller holds the result.
+    db = lifecycle._checkpoint(
         toks.select(
             "doc_id", (md5_u32(F.col("word")) % DSIR_BUCKETS).alias("bkt")
         )
         .groupBy("doc_id", "bkt")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint()
     )
     tgt = (
         db.filter(F.col("doc_id") % DSIR_TARGET_MOD == 0)
@@ -959,14 +957,14 @@ def q_text_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sum(F.col("c") * F.col("ratio")).alias("lw"))
     )
-    return (
+    return lifecycle._checkpoint(
         d.select("doc_id")
         .join(lw, "doc_id", "left")
         .select(
             "doc_id",
             F.round(F.coalesce(F.col("lw"), F.lit(0.0)), 6).alias("dsir_logw"),
         )
-    ).localCheckpoint()
+    )
 
 
 QUERIES["text_dsir_weights"] = q_text_dsir_weights

@@ -6,9 +6,9 @@
    must not leave a cached relation behind once the caller drops the
    result — a 1000-query library session must not accumulate one persisted
    relation per call. The pattern under test: persist the reused relation,
-   eagerly materialize the (result-sized) output via localCheckpoint,
-   unpersist the big relation before returning; the output's checkpoint
-   blocks die with the DataFrame via the ContextCleaner.
+   then ``lifecycle.materialize_output`` checkpoints the (result-sized)
+   output and unpersists the big relation before returning; the output's
+   checkpoint blocks die with the DataFrame via the ContextCleaner.
 
 2. The wedge self-join shape: the r14 collect_list + combination-explode
    variant measured 2-2.6x SLOWER than the codegen'd self-join (interpreted
@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import gc
 import os
+import re
 
 import pytest
 
@@ -62,6 +63,13 @@ QUERY_KEYS = [
     "text_quality_deciles",
     "search_hybrid_rrf",
     "graph_transitivity",
+    # release paths moved onto lifecycle.materialize_output
+    "graph_degree_assort",
+    "graph_modularity",
+    "embed_outlier_scores",
+    "embed_semdedup",
+    "graph_walks",
+    "graph_walk_cooc",
 ]
 
 
@@ -89,24 +97,35 @@ def test_no_cached_relation_outlives_the_result(spark, key):
 
 def test_wedge_pair_stage_is_codegen_join_not_hof_explode(spark):
     """The pair stage must be a self-join on the shared-center key; the
-    measured-slower interpreted combination explode must not come back."""
+    measured-slower interpreted combination explode must not come back.
+    Built under lazy_checkpoints so the plan shows the pipeline, not the
+    checkpointed output."""
+    from giranking_spark.lifecycle import lazy_checkpoints
     from giranking_spark.queries.compq import (
         q_graph_adamic_adar,
         q_graph_bipartite_project,
     )
+    from tests.test_scale_plans import plan_of
 
-    for fn in (q_graph_adamic_adar, q_graph_bipartite_project):
-        df = fn(spark, SF_SMALL)
-        # the returned plan is an eagerly checkpointed result; the honest
-        # shape evidence is the code itself plus this execution check —
-        # assert no higher-order transform/slice lambda ran (they would
-        # appear in the analyzed plan of a lazy build, so rebuild the
-        # module-level SQL-free way: source inspection)
-        import inspect
-
-        src = inspect.getsource(fn)
-        # match expression usage, not the docstring's history note
-        assert "flatten(transform(" not in src, fn.__name__
-        assert "F.collect_list(" not in src, fn.__name__
-        assert df.count() > 0
+    for fn, center, lo, hi in (
+        (q_graph_adamic_adar, "z", "id_a", "id_b"),
+        (q_graph_bipartite_project, "src", "dst", "dst_b"),
+    ):
+        with lazy_checkpoints():
+            plan = plan_of(fn(spark, SF_SMALL))
+        assert "collect_list" not in plan, fn.__name__
+        generates = [ln for ln in plan.splitlines() if "Generate" in ln]
+        assert not [
+            ln for ln in generates if "transform" in ln or "slice" in ln
+        ], fn.__name__
+        # the pair self-join: both keys are the center, and the pair-order
+        # filter rides as its join condition
+        assert re.search(
+            rf"Left keys \[1\]: \[{center}#\d+\]\n"
+            rf"Right keys \[1\]: \[{center}#\d+\]\n"
+            rf"Join type: Inner\n"
+            rf"Join condition: \({lo}#\d+ < {hi}#\d+\)",
+            plan,
+        ), fn.__name__
+        assert fn(spark, SF_SMALL).count() > 0
     spark.catalog.clearCache()

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from giranking_spark.config import LinkRankConfig
+from giranking_spark.lifecycle import lazy_checkpoints
 from giranking_spark.operators.linkrank import linkrank_raw
 from giranking_spark.sources.tables import derive_edges, load_table
 from tests.conftest import SF_SMALL
@@ -31,28 +32,6 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-import contextlib as _ctx  # noqa: E402
-
-
-@_ctx.contextmanager
-def lazy_checkpoints():
-    """Neuter DataFrame.localCheckpoint for the duration of a plan pin.
-
-    r14's unpersist discipline eagerly checkpoints query outputs, which
-    collapses explain() to a bare `Scan ExistingRDD` — the positive plan
-    assertions below would go vacuous. Building the query under this
-    context keeps the honest lazy pipeline visible (the same dump-only
-    trick as tools/dump_plans.py SPARK_GRAFT_PLANS_NO_CHECKPOINT)."""
-    from pyspark.sql.classic.dataframe import DataFrame as _DF
-
-    orig = _DF.localCheckpoint
-    _DF.localCheckpoint = lambda self, eager=True: self
-    try:
-        yield
-    finally:
-        _DF.localCheckpoint = orig
 
 
 def test_filter_pushdown_reaches_parquet(spark):
@@ -574,10 +553,11 @@ def test_semdedup_pair_join_is_cell_equi_join(spark):
     from giranking_spark.operators.similarity import semdedup
 
     emb = load_table(spark, SF_SMALL, "embeddings")
-    # materialize=False keeps the lazy plan: an eager-checkpointed result
+    # lazy_checkpoints keeps the lazy plan: an eager-checkpointed result
     # would show only the materialized scan and the assertion would be
     # vacuously true forever
-    plan = plan_of(semdedup(emb, 0.3, c=4, iters=1, materialize=False))
+    with lazy_checkpoints():
+        plan = plan_of(semdedup(emb, 0.3, c=4, iters=1))
     assert "CartesianProduct" not in plan
     # r10: the within-cell scoring is the Arrow GEMM candidate stage, not
     # a Sigma|cell|^2 Column-expression join
@@ -673,13 +653,10 @@ def test_walk_steps_are_equi_joins(spark):
     from giranking_spark.operators.walks import random_walks
     from giranking_spark.sources.tables import derive_edges
 
-    handles: list = []
-    walks = random_walks(
-        undirected_edges(derive_edges(spark, SF_SMALL), dedup=False),
-        2,
-        materialize=False,
-        persisted_out=handles,
-    )
+    with lazy_checkpoints():
+        walks = random_walks(
+            undirected_edges(derive_edges(spark, SF_SMALL), dedup=False), 2
+        )
     plan = plan_of(walks)
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
@@ -687,11 +664,6 @@ def test_walk_steps_are_equi_joins(spark):
     # construction (unique-by-src arrays), visible in the plan as
     # element_at over nbrs rather than a positional-index join
     assert "element_at" in plan and "nbrs" in plan, plan
-    # targeted cleanup via the returned handles (adjacency + per-step
-    # states) — no session-wide clearCache needed
-    assert len(handles) == 1 + 2  # adj, one state per step
-    for df in handles:
-        df.unpersist()
 
 
 def test_aqe_splits_skewed_join_at_runtime(spark):
@@ -790,7 +762,8 @@ def test_degree_assort_broadcasts_degree_attach(spark):
     persisted undirected-edge cache; no cartesian, no Python."""
     from giranking_spark.queries.compq import q_graph_degree_assort
 
-    plan = plan_of(q_graph_degree_assort(spark, SF_SMALL, materialize=False))
+    with lazy_checkpoints():
+        plan = plan_of(q_graph_degree_assort(spark, SF_SMALL))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
@@ -804,7 +777,8 @@ def test_outlier_scores_mean_rides_as_broadcast_topk(spark):
     never a global sort."""
     from giranking_spark.queries.simq import q_embed_outlier_scores
 
-    plan = plan_of(q_embed_outlier_scores(spark, SF_SMALL, materialize=False))
+    with lazy_checkpoints():
+        plan = plan_of(q_embed_outlier_scores(spark, SF_SMALL))
     assert "BroadcastNestedLoopJoin" in plan
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
@@ -961,16 +935,10 @@ def test_wave13_plan_shapes(spark):
     # the half-step checkpoints truncate lineage, so disable them to see
     # the INNER join shape: the state join must be an equi-join
     # (hashed/merged), never a cartesian
-    import giranking_spark.operators.salsa as salsa_mod
-
-    orig = salsa_mod._checkpoint
-    salsa_mod._checkpoint = lambda df, reliable=False: df
-    try:
+    with lazy_checkpoints():
         inner = plan_of(
             salsa_scores(derive_edges(spark, SF_SMALL), iterations=1)
         )
-    finally:
-        salsa_mod._checkpoint = orig
     assert "CartesianProduct" not in inner
     assert (
         "SortMergeJoin" in inner

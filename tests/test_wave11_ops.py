@@ -9,6 +9,7 @@ import re
 
 from pyspark.sql import functions as F
 
+from giranking_spark.lifecycle import lazy_checkpoints
 from tests.conftest import SF_SMALL
 
 
@@ -144,7 +145,8 @@ class TestEmbedOutliers:
     def test_no_python_and_broadcast_mean(self, spark):
         from giranking_spark.queries.simq import q_embed_outlier_scores
 
-        plan = plan_of(q_embed_outlier_scores(spark, SF_SMALL, materialize=False))
+        with lazy_checkpoints():
+            plan = plan_of(q_embed_outlier_scores(spark, SF_SMALL))
         assert "BatchEvalPython" not in plan
         assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
         assert "TakeOrderedAndProject" in plan

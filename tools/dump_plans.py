@@ -3,7 +3,9 @@
 Usage: python tools/dump_plans.py <outdir> <suffix> q1,q2,...
 Writes <outdir>/<query>_<suffix>.txt. Special names:
   rank_state0      — initial_state(None, derived edges) plan
-  ppr_base         — the PPR base/state0 construction plan
+  lpa_round, katz_round, opic_round — one superstep, checkpoints off
+SPARK_GRAFT_PLANS_NO_CHECKPOINT=1 builds every query with checkpoints off
+(giranking_spark.lifecycle.lazy_checkpoints).
 """
 
 from __future__ import annotations
@@ -32,53 +34,35 @@ def main() -> None:
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark("plan-dump", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
-    if os.environ.get("SPARK_GRAFT_PLANS_NO_CHECKPOINT"):
-        # r14: queries that eagerly localCheckpoint their output (unpersist
-        # discipline) explain() as a bare Scan ExistingRDD — neuter the
-        # checkpoint so the dump shows the honest pipeline plan the
-        # checkpoint would otherwise hide (dump-only; never the library)
-        # Spark 4: sessions hand out pyspark.sql.classic.dataframe.DataFrame,
-        # which overrides the abstract base — patch the concrete class
-        from pyspark.sql.classic.dataframe import DataFrame as _DF
-
-        _DF.localCheckpoint = lambda self, eager=True: self
     import __spark_entry__ as entry
+    from giranking_spark.lifecycle import lazy_checkpoints
+    from giranking_spark.sources.tables import derive_edges
 
+    # eagerly checkpointed outputs explain() as a bare Scan ExistingRDD;
+    # without checkpoints the dump shows the pipeline they would hide
+    no_checkpoint = bool(os.environ.get("SPARK_GRAFT_PLANS_NO_CHECKPOINT"))
     qs = entry.queries()
     for name in names:
         if name == "rank_state0":
             from giranking_spark.operators.linkrank import initial_state
-            from giranking_spark.sources.tables import derive_edges
 
             df = initial_state(None, derive_edges(spark, SF))
-        elif name == "lpa_round":
-            # one synchronous LPA round WITHOUT the per-round checkpoint
-            # (which collapses explain() to a Scan ExistingRDD) — the
-            # honest in-loop plan the fixpoint repeats every round
-            import giranking_spark.operators.labelprop as lp
-            from giranking_spark.sources.tables import derive_edges
+        elif name in ("lpa_round", "katz_round", "opic_round"):
+            # one superstep without checkpoints — the in-loop plan the
+            # fixpoint repeats every round
+            from giranking_spark.operators.katz import katz_scores
+            from giranking_spark.operators.labelprop import label_propagation
+            from giranking_spark.operators.opic import opic_scores
 
-            orig = lp._checkpoint
-            lp._checkpoint = lambda df: df
-            try:
-                df = lp.label_propagation(derive_edges(spark, SF), rounds=1)
-            finally:
-                lp._checkpoint = orig
-        elif name in ("katz_round", "opic_round"):
-            # one superstep WITHOUT the per-round checkpoint — the honest
-            # in-loop plan (same rationale as lpa_round)
-            import giranking_spark.operators.katz as kz
-            import giranking_spark.operators.opic as op
-            from giranking_spark.sources.tables import derive_edges
-
-            mod = kz if name == "katz_round" else op
-            orig = mod._checkpoint
-            mod._checkpoint = lambda df: df
-            try:
-                fn = kz.katz_scores if name == "katz_round" else op.opic_scores
-                df = fn(derive_edges(spark, SF), iterations=1)
-            finally:
-                mod._checkpoint = orig
+            with lazy_checkpoints():
+                if name == "lpa_round":
+                    df = label_propagation(derive_edges(spark, SF), rounds=1)
+                else:
+                    fn = katz_scores if name == "katz_round" else opic_scores
+                    df = fn(derive_edges(spark, SF), iterations=1)
+        elif no_checkpoint:
+            with lazy_checkpoints():
+                df = qs[name](spark, SF)
         else:
             df = qs[name](spark, SF)
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
