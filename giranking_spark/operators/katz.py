@@ -12,11 +12,11 @@ LinkRankComputation.java:50-107), HITS and SALSA — unlike those it needs
 no degree normalization and no global L1 step, so each superstep is
 exactly ONE equi-join + ONE aggregate and nothing else.
 
-Scale posture: per step the only shuffle is the groupBy(dst) message sum
-(map-side partial agg applies); vertices with no in-edges fall back to the
-base score via left-join coalesce.  Every step is lineage-checkpointed
-(same ~3^N re-execution guard as the rank loop).  The iteration count and
-α are a shared CONTRACT with the unrolled-CTE DuckDB oracle
+Scale posture: each step is one superstep of the shared fixed-K loop
+(operators/linkrank.py:_fixed_k_loop). Per step the only shuffle is the
+groupBy(dst) message sum (map-side partial agg applies); vertices with no
+in-edges fall back to the base score via left-join coalesce. The iteration
+count and α are a shared CONTRACT with the unrolled-CTE DuckDB oracle
 (queries/compq.py:_katz_sql).
 """
 
@@ -25,11 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from giranking_spark import lifecycle
-from giranking_spark.operators.linkrank import (
-    _loop_edges,
-    _state_side,
-)
+from giranking_spark.operators.linkrank import _fixed_k_loop
 
 KATZ_ALPHA = 0.05
 KATZ_ITERATIONS = 4
@@ -42,42 +38,37 @@ def katz_scores(
 ) -> DataFrame:
     """(id, katz) after ``iterations`` Katz steps from x₀ = 1, rounded to 6.
 
-    Scale shape (r13): the edge layout and the per-step join dispatch come
-    from the shared loop helpers (operators/linkrank.py:_loop_edges,
-    _state_side) — a broadcast-hash join that streams the cached edges
-    with NO exchange or sort while the state fits, SHUFFLE_HASH on a
-    hash(src)-persisted layout past the threshold. The message sum keeps
-    its map-side partial aggregation and the epilogue left join is
+    Scale shape (r13): while the state fits, the message join is a
+    broadcast-hash join that streams the cached edges with NO exchange or
+    sort; past the threshold it is SHUFFLE_HASH on the hash(src) layout
+    (operators/linkrank.py:_fixed_k_loop). The message sum keeps its
+    map-side partial aggregation and the epilogue left join is
     vertex-sized on both sides — both a fused union-aggregate variant and
     an unconditional repartition+persist were measured SLOWER at fixture
     scale (interleaved A/B; guide §1.1's fresh-ideal-plan gotcha).
     """
-    e, state, bcast = _loop_edges(
-        edges,
-        lambda e: lifecycle._checkpoint_nrows(
+
+    def init_state(e: DataFrame) -> DataFrame:
+        return (
             e.select(F.col("src").alias("id"))
             .unionByName(e.select(F.col("dst").alias("id")))
             .distinct()
             .select("id", F.lit(1.0).alias("katz"))
-        ),
-    )
-    for _ in range(iterations):
-        s = _state_side(state.select(F.col("id").alias("src"), "katz"), bcast)
+        )
+
+    def step(_i, e: DataFrame, state: DataFrame, side) -> DataFrame:
+        s = side(state.select(F.col("id").alias("src"), "katz"))
         sums = (
             e.join(s, "src")
             .groupBy(F.col("dst").alias("_tid"))
             .agg(F.sum("katz").alias("_msg"))
         )
-        state = lifecycle._checkpoint(
-            state.join(sums, state["id"] == F.col("_tid"), "left").select(
-                "id",
-                (
-                    F.lit(1.0)
-                    + F.lit(alpha) * F.coalesce(F.col("_msg"), F.lit(0.0))
-                ).alias("katz"),
-            )
+        return state.join(sums, state["id"] == F.col("_tid"), "left").select(
+            "id",
+            (
+                F.lit(1.0) + F.lit(alpha) * F.coalesce(F.col("_msg"), F.lit(0.0))
+            ).alias("katz"),
         )
-    # state is checkpointed per iteration, so the returned plan never
-    # re-reads e — release it
-    e.unpersist()
+
+    state = _fixed_k_loop(edges.select("src", "dst"), init_state, step, iterations)
     return state.select("id", F.round("katz", 6).alias("katz"))

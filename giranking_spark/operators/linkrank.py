@@ -10,7 +10,9 @@ The reference runs these as Giraph BSP vertex programs
   plan (no driver-side collect inside the loop)
 * superstep loop   -> bounded Python loop, localCheckpoint() to truncate
   lineage each iteration (SURVEY.md §4.2 #1); ONE loop
-  (:func:`_rank_fixpoint`) serves LinkRank, HostRank, TrustRank and PPR
+  (:func:`_rank_fixpoint`) serves LinkRank, HostRank, TrustRank and PPR,
+  and ONE fixed-K loop (:func:`_fixed_k_loop`) serves Katz, OPIC, HITS,
+  SALSA and weighted PageRank
 * normalization    -> one statement: avg/stddev_pop of log-scores + Normal-CDF
   squash (LinkRankComputation.java:216-255 spread over 3 supersteps collapses
   to a single Spark stage)
@@ -29,6 +31,8 @@ step, LinkRankComputation.java:280-282).
 
 from __future__ import annotations
 
+import functools
+import re
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Row
@@ -133,11 +137,16 @@ def edges_with_outdeg(edges: DataFrame) -> DataFrame:
 _STATE_ROW_OVERHEAD = 48
 
 
+#: Spark's byte-size suffixes, as in "10485760b" (binary units)
+_BYTE_SHIFT = {"": 0, "b": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
 def _conf_int(spark, key: str, default: int) -> int:
-    try:
-        return int(spark.conf.get(key))
-    except (TypeError, ValueError):
-        return default
+    """An integer or byte-size conf value: an unset broadcast threshold
+    reads back as "10485760b", which int() alone rejects."""
+    value = str(spark.conf.get(key)).strip().lower()
+    m = re.fullmatch(r"(-?\d+)([bkmgtp]?)b?", value)
+    return int(m.group(1)) << _BYTE_SHIFT[m.group(2)] if m else default
 
 
 def _broadcast_rule(n: int, avg_id_width: float | None, thr: int) -> bool:
@@ -284,26 +293,30 @@ def _state_side(df: DataFrame, do_broadcast: bool) -> DataFrame:
     return F.broadcast(df) if do_broadcast else df.hint("shuffle_hash")
 
 
-def _loop_edges(
-    edges: DataFrame, build_state: Callable[[DataFrame], tuple[DataFrame, int]]
-) -> tuple[DataFrame, DataFrame, bool]:
-    """(edges, state, bcast) for a loop joining edges(src, dst) with its
-    vertex state every superstep (katz, opic); the caller unpersists the
-    returned edges.
+def _fixed_k_loop(
+    edges: DataFrame,
+    build_state: Callable[[DataFrame], DataFrame],
+    step: Callable[..., DataFrame],
+    steps: int,
+) -> DataFrame:
+    """The ONE fixed-K superstep loop behind Katz, OPIC, HITS, SALSA and
+    weighted PageRank: the loop owns the lifecycle, each algorithm
+    supplies ``build_state(edges)`` (the lazy initial vertex state) and
+    ``step(i, edges, state, side)`` (superstep i's new state), where
+    ``side`` is :func:`_state_side` bound to the broadcast decision.
+    ``edges`` carries whatever columns the caller selected.
 
     The edges are persisted columnar, not checkpointed: at sf100 the raw
     row-block copy of the 600M-edge relation blew task memory where the
     columnar cache fits (r14 decade sweep), and a persist can be released.
-    The cache is filled BEFORE ``build_state(edges)``, whose union branches
-    would otherwise race the fill inside one job. ``build_state`` returns
-    the materialized state and its row count, which decide the broadcast
-    dispatch. Past the threshold the edges swap to the hash(src) layout
-    (partitioned copy materialized from the cache, then the unpartitioned
-    one freed: ONE copy in steady state), so the SHUFFLE_HASH join
-    (:func:`_state_side`) exchanges only the vertex-sized state per step."""
-    e = edges.select("src", "dst").persist()
+    The cache is filled BEFORE the state is built, whose union branches
+    would otherwise race the fill inside one job. Past the broadcast
+    threshold the edges swap to the hash(src) layout (ONE copy in steady
+    state), so the SHUFFLE_HASH join exchanges only the vertex-sized state
+    per step. Every superstep is checkpointed, then GC-nudged."""
+    e = edges.persist()
     e.count()
-    state, n = build_state(e)
+    state, n = lifecycle._checkpoint_nrows(build_state(e))
     bcast = _should_broadcast_state(e, n, state)
     if not bcast:
         width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
@@ -311,7 +324,13 @@ def _loop_edges(
         e2.count()
         e.unpersist()
         e = e2
-    return e, state, bcast
+    side = functools.partial(_state_side, do_broadcast=bcast)
+    for i in range(steps):
+        state = lifecycle._checkpoint(step(i, e, state, side))
+        lifecycle._gc_nudge(state, n)
+    # every state is checkpointed, so the returned plan never re-reads e
+    e.unpersist()
+    return state
 
 
 def contributions(

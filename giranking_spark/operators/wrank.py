@@ -11,12 +11,14 @@ with W(u) = Σ over u's out-edges of w, and D the dangling mass (vertices
 with no out-edges), redistributed uniformly — plain float64 arithmetic (no
 float32-teleport compat; that quirk is reference parity only).
 
-Scale shape is the rank loop's (operators/linkrank.py): the per-iteration
-message total is the FUSED union-aggregate — contribution rows union one
-0-contrib state row per vertex, one groupBy(id) is the iteration's only
-shuffle; N and the dangling mass ride as broadcast single-row cross joins;
-lineage is checkpoint-truncated per iteration. The iteration count is a
-contract with the unrolled-CTE oracle (queries/compq.py).
+Each update is one superstep of the shared fixed-K loop
+(operators/linkrank.py:_fixed_k_loop). The message total is the rank
+loop's FUSED union-aggregate — contribution rows union one 0-contrib state
+row per vertex, one groupBy(id) is the update's only message shuffle; N
+and the dangling mass ride as broadcast single-row cross joins. A vertex
+whose out-weights sum to 0 sends no share and counts as dangling. The
+iteration count is a contract with the unrolled-CTE oracle
+(queries/compq.py).
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from giranking_spark import lifecycle
+from giranking_spark.operators.linkrank import _fixed_k_loop
 
 WRANK_ITERATIONS = 3
 WRANK_DAMPING = 0.85
@@ -40,26 +42,36 @@ def weighted_pagerank(
     (every id appearing as src or dst); initial score is the uniform
     distribution 1/N."""
     teleport = 1.0 - damping  # float64, embedded verbatim in the oracle
-    e = edges_w.select("src", "dst", F.col("w").cast("double").alias("w")).persist()
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    wsum = e.groupBy("src").agg(F.sum("w").alias("outw"))
-    nn = verts.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    state = lifecycle._checkpoint(
-        verts.join(wsum, verts.id == wsum.src, "left")
-        .crossJoin(F.broadcast(nn))
-        .select(
-            verts.id,
-            (F.lit(1.0) / F.col("_n")).alias("score"),
-            F.coalesce(F.col("outw"), F.lit(0.0)).alias("outw"),
-            "_n",
+
+    def init_state(e: DataFrame) -> DataFrame:
+        verts = (
+            e.select(F.col("src").alias("id"))
+            .unionByName(e.select(F.col("dst").alias("id")))
+            .distinct()
         )
-    )
-    for _ in range(iterations):
-        contribs = e.join(state, e.src == state.id).select(
+        wsum = e.groupBy("src").agg(F.sum("w").alias("outw"))
+        nn = verts.agg(F.count(F.lit(1)).cast("double").alias("_n"))
+        return (
+            verts.join(wsum, verts.id == wsum.src, "left")
+            .crossJoin(F.broadcast(nn))
+            .select(
+                verts.id,
+                (F.lit(1.0) / F.col("_n")).alias("score"),
+                F.coalesce(F.col("outw"), F.lit(0.0)).alias("outw"),
+                "_n",
+            )
+        )
+
+    def step(_i, e: DataFrame, state: DataFrame, side) -> DataFrame:
+        # outw > 0 filter BEFORE the share division: under ANSI a
+        # zero-weight vertex's 0/0 share raises DIVIDE_BY_ZERO (without
+        # ANSI it is a null the sum skips), and that vertex is dangling
+        s = side(
+            state.filter(F.col("outw") > 0).select(
+                F.col("id").alias("src"), "score", "outw"
+            )
+        )
+        contribs = e.join(s, "src").select(
             F.col("dst").alias("id"),
             (F.col("score") * F.col("w") / F.col("outw")).alias("contrib"),
             F.lit(None).cast("double").alias("outw"),
@@ -78,17 +90,16 @@ def weighted_pagerank(
         d_mass = state.filter(F.col("outw") == 0.0).agg(
             F.coalesce(F.sum("score"), F.lit(0.0)).alias("dangling")
         )
-        state = lifecycle._checkpoint(
-            msgst.crossJoin(F.broadcast(d_mass)).select(
-                "id",
-                (
-                    F.lit(teleport) / F.col("_n")
-                    + F.lit(damping)
-                    * (F.col("msg") + F.col("dangling") / F.col("_n"))
-                ).alias("score"),
-                "outw",
-                "_n",
-            )
+        return msgst.crossJoin(F.broadcast(d_mass)).select(
+            "id",
+            (
+                F.lit(teleport) / F.col("_n")
+                + F.lit(damping) * (F.col("msg") + F.col("dangling") / F.col("_n"))
+            ).alias("score"),
+            "outw",
+            "_n",
         )
-    e.unpersist()
+
+    e = edges_w.select("src", "dst", F.col("w").cast("double").alias("w"))
+    state = _fixed_k_loop(e, init_state, step, iterations)
     return state.select("id", F.round("score", 6).alias("score"))

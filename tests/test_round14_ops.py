@@ -70,6 +70,12 @@ QUERY_KEYS = [
     "embed_semdedup",
     "graph_walks",
     "graph_walk_cooc",
+    # the fixed-K superstep loop releases its edge cache
+    "graph_katz",
+    "crawl_opic_scores",
+    "graph_hits",
+    "graph_salsa",
+    "graph_weighted_rank",
 ]
 
 
